@@ -26,6 +26,16 @@ def main() -> None:
     from knowledge_nexus_spark.session import get_spark
 
     names = sys.argv[1:]
+    unknown = [n for n in names if n not in QUERIES]
+    if not names or unknown:
+        if unknown:
+            print(f"unknown query: {', '.join(unknown)}", file=sys.stderr)
+        print(
+            "usage: python bench_extra.py <query> [query ...]\nknown queries: "
+            + " ".join(sorted(QUERIES)),
+            file=sys.stderr,
+        )
+        sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))

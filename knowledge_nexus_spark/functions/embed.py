@@ -150,23 +150,37 @@ def cosine_pairs_arrow(
     from the Arrow list arrays' flat value buffers (one zero-copy
     reshape per batch) instead of materializing one numpy object per
     row the way Arrow→pandas conversion does — at ~10⁷ candidate pairs
-    those per-row allocations dominate the verify stage."""
+    those per-row allocations dominate the verify stage. A null vector,
+    or vectors of unequal length within or across the two columns, raise
+    ``ValueError`` naming the column."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as ST
 
     fields = [f for f in df.schema.fields if f.name not in (a_col, b_col)]
     out_schema = ST.StructType(fields + [ST.StructField(out_col, ST.DoubleType())])
     keep = [f.name for f in fields]
 
+    def matrix(b, col: str, dim: int | None = None):
+        # flatten() skips null lists and reshape(n, -1) takes any divisible
+        # total, so a null or ragged vector would silently shift every
+        # later row's pairing — refuse instead
+        arr = b.column(b.schema.get_field_index(col))
+        lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
+        dim = lens[0] if dim is None else dim
+        if arr.null_count or (lens != dim).any():
+            raise ValueError(
+                f"cosine_pairs_arrow: column {col!r} holds a null vector or "
+                f"vectors of unequal length (lengths {sorted(set(lens.tolist()))})"
+            )
+        return np.asarray(arr.flatten()).astype(np.float64).reshape(len(arr), dim)
+
     def gen(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            la = b.column(b.schema.get_field_index(a_col)).flatten()
-            lb = b.column(b.schema.get_field_index(b_col)).flatten()
-            a = np.asarray(la).astype(np.float64).reshape(n, -1)
-            bb = np.asarray(lb).astype(np.float64).reshape(n, -1)
+            a = matrix(b, a_col)
+            bb = matrix(b, b_col, a.shape[1])
             dot = np.cumsum(a * bb, axis=1)[:, -1]
             na = np.sqrt(np.cumsum(a * a, axis=1)[:, -1])
             nb = np.sqrt(np.cumsum(bb * bb, axis=1)[:, -1])

@@ -356,71 +356,10 @@ def extract_triples_native(documents: DataFrame) -> DataFrame:
     )
 
 
-def doc_bookmark_urls_expr(spans_col):
-    """ARRAY<STRING> of bookmark-able URLs in one document's spans.
-
-    Mirrors the reference's add-bookmark call sites exactly
-    (notion_provider.py:288-296 scrapes ANY non-uuid href, not only
-    http(s)): refs of bookmark/embed/link_preview and prop_url spans, plus
-    markdown hrefs with no Notion uuid inside rich-text / prop_rich_text /
-    prop_title spans. Span KIND decides bookmark-ability — the triple set
-    alone cannot (a link_to_page ref and a bookmark ref are
-    indistinguishable as (pred, obj, context))."""
-    md_link = r"\[([^\]]*)\]\(([^)]+)\)"
-    href_uuid_re = (
-        r"^(?:https://www\.notion\.so)?/(?:[a-zA-Z0-9-]+/)?(?:[a-zA-Z0-9-]+-)?(" + _UUID_BODY + r")"
-    )
-    empty = F.array().cast("array<string>")
-
-    def per_span(s):
-        from knowledge_nexus_spark.functions.render import RUNS_DDL
-
-        kind = s["kind"]
-        text = F.coalesce(s["text"], F.lit(""))
-        ref = s["media_ref"]
-        hrefs = F.regexp_extract_all(text, F.lit(md_link), 2)
-        non_uuid_hrefs = F.filter(
-            hrefs, lambda h: F.regexp_extract(h, href_uuid_re, 1) == ""
-        )
-        runs = F.coalesce(F.from_json(text, RUNS_DDL), F.expr(f"CAST(array() AS {RUNS_DDL})"))
-        run_hrefs = F.transform(
-            F.filter(runs, lambda r: r["href"].isNotNull() & (r["href"] != "")),
-            lambda r: r["href"],
-        )
-        non_uuid_run_hrefs = F.filter(
-            run_hrefs, lambda h: F.regexp_extract(h, href_uuid_re, 1) == ""
-        )
-        return (
-            F.when(
-                kind.isin("bookmark", "embed", "link_preview", "prop_url")
-                & ref.isNotNull(),
-                F.array(ref),
-            )
-            .when(
-                kind.isin(*RICH_TEXT_KINDS)
-                | (kind == "prop_rich_text")
-                | (kind == "prop_title"),
-                non_uuid_hrefs,
-            )
-            .when(kind == "rich_runs", non_uuid_run_hrefs)
-            .otherwise(empty)
-        )
-
-    return F.flatten(F.transform(spans_col, per_span))
-
-
-def bookmark_urls(documents: DataFrame) -> DataFrame:
-    """Distinct bookmark-able URLs of a (content-gated) documents frame."""
-    return (
-        documents.select(F.explode(doc_bookmark_urls_expr(F.col("spans"))).alias("id"))
-        .distinct()
-    )
-
-
 def bookmark_nodes(urls: DataFrame) -> DataFrame:
     """Bookmark nodes for external-URL objects (notion_provider.py:288-296)
-    from a one-column ``id`` URL frame (see ``bookmark_urls`` /
-    ``doc_bookmark_urls_expr``).
+    from a one-column ``id`` URL frame (the ``bm``-flagged triple objects,
+    see ``span_triples_expr``).
 
     The reference scrapes (title, description) per URL (web_scraper.py:9-15);
     here both are synthesized deterministically from the URL itself, JVM-side.

@@ -634,7 +634,7 @@ def substring_window_pairs(
             texts = b.column(1).to_pylist()
             o_id, o_h = [], []
             for did, tx in zip(ids, texts):
-                toks = re.split(r"\s+", (tx or "").strip(" ").lower())
+                toks = re.split(r"\s+", (tx or "").strip(" ").lower(), flags=re.ASCII)
                 if len(toks) < window:
                     continue
                 seen = set()

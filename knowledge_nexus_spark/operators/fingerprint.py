@@ -168,7 +168,9 @@ def fingerprint_summary_arrow(
     Tokenizer parity with the native form, precisely: trim = ASCII
     spaces only (F.trim), then lower, then re.split(r"\\s+") — Python's
     bare str.split() would silently drop the leading empty token a
-    tab-leading document produces."""
+    tab-leading document produces. ``re.ASCII``: Java's ``\\s`` is the six
+    ASCII whitespace characters; Python's Unicode ``\\s`` also splits on
+    ``\\xa0``, ``\\x1c``-``\\x1f``, ``\\x85`` and ``\\u2028``."""
     import re
 
     import numpy as np
@@ -194,7 +196,7 @@ def fingerprint_summary_arrow(
             texts = b.column(b.schema.get_field_index(text_col)).to_pylist()
             o_id, o_n, o_mn, o_mx, o_ck = [], [], [], [], []
             for did, tx in zip(ids, texts):
-                toks = re.split(r"\s+", (tx or "").strip(" ").lower())
+                toks = re.split(r"\s+", (tx or "").strip(" ").lower(), flags=re.ASCII)
                 if len(toks) < k:
                     continue
                 n_sh = len(toks) - k + 1

@@ -126,7 +126,9 @@ def cap_group_size(
 def page_nodes(
     documents: DataFrame, add_archived: bool = False, add_removed: bool = False
 ) -> DataFrame:
-    """documents → node rows with archived/in-trash gates and title tags."""
+    """Fused-projection rows (see pipeline.fused_docs_projection) → node
+    rows with archived/in-trash gates, title tags and the rendered
+    content."""
     keep = F.lit(True)
     if not add_archived:
         keep = keep & ~F.col("archived")
@@ -144,7 +146,7 @@ def page_nodes(
         .otherwise(F.lit("Page"))
         .alias("type"),
         "url",
-        F.lit(None).cast("string").alias("content"),
+        "content",
         F.lit("Notion").alias("source"),
         "last_edited_time",
     )

@@ -141,14 +141,7 @@ def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
     combined = combined.localCheckpoint(eager=True)
 
     meta = combined.select("doc_id", "last_edited_time")
-    # page_nodes synthesizes a null content column; re-attach the rendered
-    # content from the fused projection instead
-    nodes = (
-        page_nodes(combined, cfg.add_archived, cfg.add_removed)
-        .drop("content")
-        .join(combined.select(F.col("doc_id").alias("id"), "content"), "id", "left")
-        .select("id", "title", "type", "url", "content", "source", "last_edited_time")
-    )
+    nodes = page_nodes(combined, cfg.add_archived, cfg.add_removed)
 
     exploded = combined.select(
         "doc_id",

@@ -2,15 +2,18 @@
 
 Stage graph (SURVEY.md §3.1 rebuild lifecycle):
   1. freshness dedup (A5)              — window last-writer-wins
-  2. extract: triples + bookmark nodes — Arrow mapInPandas over spans
-  3. render + chunk + embed            — pandas UDFs, posexplode
+  2. fused projection                  — spans parsed once: rendered content
+                                         + per-doc triple array (JVM-native)
+  3. nodes + bookmark nodes / triples  — projection_graph; chunk + embed
   4. entity linking (J10)              — MinHashLSH blocking + cosine re-rank
   5. canonicalization (G3)             — salted iterative connected components
   6. orphan policy (J1/J2) + materialize nodes/edges
 
-Each stage can be checkpointed via storage.checkpoint.StageCheckpointer so
-a killed run resumes from the last committed snapshot (the reference's
-cache short-circuits, cache_util.py:98-120 / notion_provider.py:80-91).
+``build_graph`` and ``run_pipeline`` run the same stage graph and differ
+only in how they hold stage outputs: ``build_graph`` persists them,
+``run_pipeline`` commits each as a StageCheckpointer snapshot so a killed
+run resumes from the last committed one (the reference's cache
+short-circuits, cache_util.py:98-120 / notion_provider.py:80-91).
 """
 
 from __future__ import annotations
@@ -19,14 +22,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from knowledge_nexus_spark.functions.extract import (
+    TRIPLE_ARRAY_DDL,
     bookmark_nodes,
-    bookmark_urls,
-    extract_triples,
-    extract_triples_native,
+    doc_triples_expr,
+    normalize_uuid_col,
 )
-from knowledge_nexus_spark.functions.render import render_spans, render_spans_native
+from knowledge_nexus_spark.functions.render import render_spans_native, spans_with_runs
 from knowledge_nexus_spark.operators.graphops import (
     add_missing_nodes,
     clean_orphans,
@@ -43,8 +47,6 @@ class PipelineConfig:
     add_removed: bool = False  # config.yaml:17 add_removed_page_nodes
     create_unprocessed: bool = False  # config.yaml:18 create_unprocessed_graph_nodes
     render_content: bool = True
-    native_extract: bool = True  # JVM codegen extraction (pandas variant is the spec)
-    native_render: bool = True  # JVM aggregate-fold render (pandas variant is the spec)
     embedding_dim: int = 64
     chunk_size: int = 200  # token budget (config.yaml:50 max_tokens, scaled down)
     chunk_overlap: int = 20  # config.yaml:51 overlap, scaled proportionally
@@ -65,8 +67,8 @@ class PipelineConfig:
     # cache the fused intermediate (True) vs recompute per sink branch
     # (False). WARNING: False is pathological in build_graph — the fused
     # projection has 4+ consumers (nodes, bookmarks, hot-key pre-agg, semi
-    # joins) and each would re-run render+extract; it exists only for
-    # run_pipeline-style flows where stage snapshots replace the cache.
+    # joins) and each would re-run render+extract; run_pipeline's s2 and s3
+    # snapshots each re-run it too (see run_pipeline's measurement).
     persist_intermediate: bool = True
     # freshness dedup via broadcast few-dups joins instead of the wide
     # window shuffle (see graphops.freshness_dedup tradeoff notes)
@@ -77,6 +79,42 @@ _HEADER_COLS = [
     "doc_id", "title", "doc_kind", "url", "archived", "in_trash",
     "last_edited_time",
 ]
+
+# (SparkContext, render_content) -> the fused projection's three Columns
+_PROJECTION_COLUMNS: dict = {}
+
+
+def _projection_key(sc, render_content: bool) -> tuple:
+    """Memo key of the fused projection's Columns. The SparkContext OBJECT
+    is part of the key (identity-hashed), so a stopped and restarted
+    session gets Columns built for its own context."""
+    return (sc, render_content)
+
+
+def _projection_columns(sc, render_content: bool) -> tuple:
+    """The fused projection's Columns, built once per live SparkContext.
+    Building them costs thousands of py4j round trips (the render fold
+    alone measured 0.58-0.69 s on a 4-core host); they depend on nothing
+    but ``render_content``, so every later call reuses them."""
+    key = _projection_key(sc, render_content)
+    cols = _PROJECTION_COLUMNS.get(key)
+    if cols is None:
+        for stale in [k for k in _PROJECTION_COLUMNS if k[0] is not sc]:
+            del _PROJECTION_COLUMNS[stale]
+        processed_pred = ~F.col("archived") & ~F.col("in_trash")
+        content = (
+            F.when(processed_pred, render_spans_native(F.col("spans"), runs_parsed=True))
+            if render_content
+            else F.lit(None).cast("string")
+        )
+        cols = _PROJECTION_COLUMNS[key] = (
+            spans_with_runs(F.col("spans")).alias("spans"),
+            content.alias("content"),
+            F.when(processed_pred, doc_triples_expr(F.col("spans"), runs_parsed=True))
+            .otherwise(F.array().cast(TRIPLE_ARRAY_DDL))
+            .alias("_tris"),
+        )
+    return cols
 
 
 def fused_docs_projection(docs: DataFrame, cfg: "PipelineConfig") -> DataFrame:
@@ -90,32 +128,30 @@ def fused_docs_projection(docs: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     extraction, and bookmark hrefs all share that single parse; Catalyst
     keeps the Projects separate because the parse is non-cheap and
     multiply-referenced), the second folds content + triples from the
-    parsed spans. Shared by build_graph and the incremental refresh."""
-    from knowledge_nexus_spark.functions.extract import (
-        TRIPLE_ARRAY_DDL,
-        doc_triples_expr,
+    parsed spans. Bookmark urls ride INSIDE the triple array (the ``bm``
+    flag), so one extraction pass serves both the edges and the bookmark
+    branch. Shared by build_graph, run_pipeline and the incremental
+    refresh."""
+    parse, content, tris = _projection_columns(
+        docs.sparkSession.sparkContext, cfg.render_content
     )
-    from knowledge_nexus_spark.functions.render import spans_with_runs
+    return docs.select(*_HEADER_COLS, parse).select(*_HEADER_COLS, content, tris)
 
-    processed_pred = ~F.col("archived") & ~F.col("in_trash")
-    parsed = docs.select(*_HEADER_COLS, spans_with_runs(F.col("spans")).alias("spans"))
 
-    empty_tris = F.array().cast(TRIPLE_ARRAY_DDL)
-    content_expr = (
-        F.when(processed_pred, render_spans_native(F.col("spans"), runs_parsed=True))
-        if cfg.render_content
-        else F.lit(None).cast("string")
+def projection_graph(combined: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """(nodes, triples_raw) from the fused projection: page nodes carrying
+    the rendered content plus one Bookmark node per distinct ``bm``-flagged
+    url, and the per-encounter triples (the explode of ``_tris``)."""
+    exploded = combined.select(
+        normalize_uuid_col(F.col("doc_id")).alias("subj"),
+        F.explode("_tris").alias("t"),
     )
-    # bookmark urls ride INSIDE the triple array (the `bm` flag) — one
-    # extraction pass serves both the edges and the bookmark branch; a
-    # separate bookmark-url projection would re-run the span regexes.
-    return parsed.select(
-        *_HEADER_COLS,
-        content_expr.alias("content"),
-        F.when(processed_pred, doc_triples_expr(F.col("spans"), runs_parsed=True))
-        .otherwise(empty_tris)
-        .alias("_tris"),
+    triples_raw = exploded.select("subj", "t.pred", "t.obj", "t.context")
+    burls = exploded.filter(F.col("t.bm")).select(F.col("t.obj").alias("id")).distinct()
+    nodes = page_nodes(combined, cfg.add_archived, cfg.add_removed).unionByName(
+        bookmark_nodes(burls)
     )
+    return nodes, triples_raw
 
 
 @dataclass
@@ -144,107 +180,35 @@ def build_graph(
 ) -> GraphResult:
     """documents(spans) → (nodes, edges).
 
-    ``persist_triples`` caches the raw triple extraction: both the bookmark
-    nodes and the edge set consume it, and without reuse the (Python UDF)
-    extraction would execute 2-3× inside one job tree. The freshness-deduped
-    documents are persisted for the same reason — the nodes/render branch
-    and the extraction branch both consume them, and the dedup is the
-    single widest shuffle in the plan. In the checkpointed ``run_pipeline``
-    the stage snapshots play this role instead."""
-    from pyspark.storagelevel import StorageLevel
+    SINGLE-PASS plan (see fused_docs_projection): content + triple array
+    computed together directly after the dedup window — the wide spans
+    column is scanned once, shuffled once, and DROPPED; the persisted
+    intermediate holds only (header cols, content, triple array).
 
+    ``persist_triples`` caches the raw triples: the orphan policy's hot-key
+    pre-aggregation and semi-joins both consume them."""
     cfg = cfg or PipelineConfig()
 
-    if cfg.native_extract and cfg.native_render:
-        # SINGLE-PASS plan (see fused_docs_projection): content + triple
-        # array computed together directly after the dedup window — the
-        # wide spans column is scanned once, shuffled once, and DROPPED;
-        # the persisted intermediate holds only (header cols, content,
-        # triple array). Halves the wide-data I/O vs separate render and
-        # extract branches.
-        from knowledge_nexus_spark.functions.extract import normalize_uuid_col
-
-        deduped = freshness_dedup(documents, few_dups=cfg.dedup_few_dups)
-        if cfg.with_media and cfg.persist_intermediate:
-            # the media branch re-scans the wide spans column; persisting
-            # the deduped frame keeps the dedup window (the plan's widest
-            # shuffle) from running twice. MEMORY_AND_DISK — spans spill.
-            deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-        combined = fused_docs_projection(deduped, cfg)
-        if cfg.persist_intermediate:
-            combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
-        docs = combined  # header columns preserved; spans intentionally gone
-
-        keep = F.lit(True)
-        if not cfg.add_archived:
-            keep = keep & ~F.col("archived")
-        if not cfg.add_removed:
-            keep = keep & ~F.col("in_trash")
-        title = (
-            F.when(F.col("archived"), F.concat(F.lit("[ARCHIVED] "), F.col("title")))
-            .when(F.col("in_trash"), F.concat(F.lit("[REMOVED] "), F.col("title")))
-            .otherwise(F.col("title"))
-        )
-        nodes = combined.filter(keep).select(
-            F.col("doc_id").alias("id"),
-            title.alias("title"),
-            F.when(F.col("doc_kind") == "database", F.lit("Database"))
-            .otherwise(F.lit("Page"))
-            .alias("type"),
-            "url",
-            "content",
-            F.lit("Notion").alias("source"),
-            "last_edited_time",
-        )
-        exploded = combined.select(
-            normalize_uuid_col(F.col("doc_id")).alias("subj"),
-            F.explode("_tris").alias("t"),
-        )
-        triples_raw = exploded.select("subj", "t.pred", "t.obj", "t.context")
-        burl_frame = (
-            exploded.filter(F.col("t.bm")).select(F.col("t.obj").alias("id")).distinct()
-        )
-    else:
-        # legacy two-branch plan (the Arrow/pandas spec implementations)
-        docs = freshness_dedup(documents).persist(StorageLevel.MEMORY_AND_DISK)
-
-        nodes = page_nodes(docs, cfg.add_archived, cfg.add_removed)
-        processed = content_docs(docs)
-        if cfg.render_content:
-            render = render_spans_native if cfg.native_render else render_spans
-            rendered = processed.select(
-                "doc_id", render(F.col("spans")).alias("_rendered")
-            )
-            nodes = (
-                nodes.drop("content")
-                .join(rendered, nodes["id"] == rendered["doc_id"], "left")
-                .select(
-                    "id",
-                    "title",
-                    "type",
-                    "url",
-                    F.col("_rendered").alias("content"),
-                    "source",
-                    "last_edited_time",
-                )
-            )
-        extract = extract_triples_native if cfg.native_extract else extract_triples
-        triples_raw = extract(processed)
-        burl_frame = bookmark_urls(processed)
+    deduped = freshness_dedup(documents, few_dups=cfg.dedup_few_dups)
+    if cfg.with_media and cfg.persist_intermediate:
+        # the media branch re-scans the wide spans column; persisting
+        # the deduped frame keeps the dedup window (the plan's widest
+        # shuffle) from running twice. MEMORY_AND_DISK — spans spill.
+        deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
+    combined = fused_docs_projection(deduped, cfg)
+    if cfg.persist_intermediate:
+        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    all_nodes, triples_raw = projection_graph(combined, cfg)
 
     if persist_triples and cfg.persist_intermediate:
         triples_raw = triples_raw.persist(StorageLevel.MEMORY_AND_DISK)
-    all_nodes = nodes.unionByName(bookmark_nodes(burl_frame))
 
     media_edges = None
     media_nodes = None
     if cfg.with_media:
         from knowledge_nexus_spark.multimodal import media_graph
 
-        span_docs = (
-            deduped if (cfg.native_extract and cfg.native_render) else docs
-        )
-        media_nodes, media_edges = media_graph(span_docs)
+        media_nodes, media_edges = media_graph(deduped)
 
     if cfg.create_unprocessed:
         all_nodes = add_missing_nodes(triples_raw, all_nodes)
@@ -267,7 +231,7 @@ def build_graph(
             media_edges.withColumn("context", F.coalesce(F.col("context"), F.lit("")))
         )
     return GraphResult(
-        nodes=all_nodes, edges=edges, triples_raw=triples_raw, documents=docs
+        nodes=all_nodes, edges=edges, triples_raw=triples_raw, documents=combined
     )
 
 
@@ -280,38 +244,33 @@ def run_pipeline(
     """Full checkpointed run: every stage is a committed snapshot, a rerun
     resumes from the last committed one (SURVEY.md §4.4). Returns the
     checkpointer (whose ``metrics`` carry per-stage per-partition lineage)
-    plus the final nodes/edges/chunks DataFrames."""
+    plus the final nodes/edges/chunks DataFrames.
+
+    s2 (triples) and s3 (nodes) are the two halves of ``projection_graph``
+    over ONE fused projection of the s1 snapshot, persisted across both
+    saves: s2's write job fills the cache and s3 reads it, so the spans are
+    parsed, rendered and extracted once. Counter-measurement (4-core host,
+    2,000-doc corpus, one session, 6 runs per side in ABBA order): the s3
+    save took a median 0.47 s (0.41-0.61) persisted vs 1.13 s (1.03-1.30)
+    recomputed, while s2, which fills the cache, took 0.64 vs 0.68 s; so
+    s2 + s3 fell from 1.81 to 1.11 s."""
     from knowledge_nexus_spark.operators.chunking import chunk_and_embed, has_chunk_triples
     from knowledge_nexus_spark.storage.checkpoint import StageCheckpointer
 
     cfg = cfg or PipelineConfig()
     ck = StageCheckpointer(spark, workdir)
 
-    docs = ck.load_or_compute("s1_documents", lambda: freshness_dedup(documents))
+    docs = ck.load_or_compute(
+        "s1_documents", lambda: freshness_dedup(documents, few_dups=cfg.dedup_few_dups)
+    )
 
-    processed = content_docs(docs)
-    extract = extract_triples_native if cfg.native_extract else extract_triples
-    triples_raw = ck.load_or_compute("s2_triples_raw", lambda: extract(processed))
-
-    def _nodes():
-        nodes = page_nodes(docs, cfg.add_archived, cfg.add_removed)
-        if cfg.render_content:
-            render = render_spans_native if cfg.native_render else render_spans
-            rendered = processed.select(
-                "doc_id", render(F.col("spans")).alias("_rendered")
-            )
-            nodes = (
-                nodes.drop("content")
-                .join(rendered, nodes["id"] == rendered["doc_id"], "left")
-                .select(
-                    "id", "title", "type", "url",
-                    F.col("_rendered").alias("content"),
-                    "source", "last_edited_time",
-                )
-            )
-        return nodes.unionByName(bookmark_nodes(bookmark_urls(processed)))
-
-    nodes = ck.load_or_compute("s3_nodes", _nodes)
+    combined = fused_docs_projection(docs, cfg)
+    if cfg.persist_intermediate:
+        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    graph_nodes, graph_triples = projection_graph(combined, cfg)
+    triples_raw = ck.load_or_compute("s2_triples_raw", lambda: graph_triples)
+    nodes = ck.load_or_compute("s3_nodes", lambda: graph_nodes)
+    combined.unpersist(blocking=True)
 
     chunks = None
     extra_edges = None
@@ -328,7 +287,7 @@ def run_pipeline(
         from knowledge_nexus_spark.operators.linking import detect_mentions, link_entities
 
         def _links():
-            mentions = detect_mentions(processed)
+            mentions = detect_mentions(content_docs(docs))
             entities = nodes.select("id", F.col("title").alias("name"))
             return link_entities(
                 mentions, entities, min_cosine=cfg.link_min_cosine,

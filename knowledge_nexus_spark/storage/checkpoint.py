@@ -9,10 +9,12 @@ version); a stage whose committed snapshot exists is NOT recomputed on
 rerun. In production swap the parquet dir for an Iceberg table — the
 commit protocol (write, then publish meta) is the same shape.
 
-Per-partition lineage: counts by spark_partition_id() are computed with
-``observe()``-style aggregation at write time and stored in the sidecar,
-satisfying the north-star's "per-partition lineage and triple-count
-metrics" without a second scan of the data.
+Each commit is ONE Spark job, the write itself: the row count rides on
+the write as an ``observe()`` metric, the per-partition counts (one per
+write task, satisfying the north-star's "per-partition lineage and
+triple-count metrics") come from the written part files' parquet footers
+read on the driver, and the snapshot is re-read with its declared schema,
+so there is neither a second scan of the data nor a schema-inference job.
 """
 
 from __future__ import annotations
@@ -23,11 +25,39 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 META_FILE = "_STAGE_META.json"
 FORMAT_VERSION = 1
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable — the
+    schema Spark's parquet reader reports for files written from ``dt``."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_partition_counts(path: str) -> list[dict]:
+    """Rows per write task, summed over the task's part files
+    (``part-<task>-<uuid>...parquet``), from each file's parquet footer."""
+    rows: dict[int, int] = {}
+    for fname in os.listdir(path):
+        if fname.startswith("part-") and fname.endswith(".parquet"):
+            task = int(fname.split("-", 2)[1])
+            meta = pq.read_metadata(os.path.join(path, fname))
+            rows[task] = rows.get(task, 0) + meta.num_rows
+    return [{"partition": p, "rows": n} for p, n in sorted(rows.items())]
 
 
 @dataclass
@@ -63,51 +93,42 @@ class StageCheckpointer:
                 return False
         return True
 
-    def save(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
-        """Write the stage output + metrics sidecar; returns the re-read
-        DataFrame (so downstream stages scan the snapshot, cutting lineage)."""
+    def save(self, name: str, df: DataFrame) -> DataFrame:
+        """Write the stage output + metrics sidecar in one Spark job; returns
+        the re-read DataFrame (so downstream stages scan the snapshot,
+        cutting lineage)."""
         path = self._path(name)
-        tmp_meta = None
-        # per-partition lineage in the same job as the write would need
-        # observe(); a cheap one-pass aggregate over the written files is
-        # equivalent and keeps the write plan clean
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-
-        out = self.spark.read.parquet(path)
-        part_counts = [
-            {"partition": r["pid"], "rows": r["rows"]}
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
+        counted = Observation()
+        df.observe(counted, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        part_counts = _footer_partition_counts(path)
+        schema = _nullable(df.schema)
         meta = {
             "format_version": FORMAT_VERSION,
             "stage": name,
             "committed_at_epoch": time.time(),
-            "row_count": sum(p["rows"] for p in part_counts),
+            "row_count": counted.get["rows"],
             "n_partitions": len(part_counts),
-            "partition_counts": sorted(part_counts, key=lambda p: p["partition"]),
-            "schema": out.schema.jsonValue(),
+            "partition_counts": part_counts,
+            "schema": schema.jsonValue(),
         }
         tmp_meta = self._meta_path(name) + ".tmp"
         with open(tmp_meta, "w") as f:
             json.dump(meta, f)
         os.replace(tmp_meta, self._meta_path(name))  # atomic publish = commit
         self.metrics[name] = {k: meta[k] for k in ("row_count", "n_partitions")}
-        return out
+        return self.spark.read.schema(schema).parquet(path)
 
     def load(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))
 
-    def load_or_compute(self, name: str, compute, partition_by: list[str] | None = None) -> DataFrame:
+    def load_or_compute(self, name: str, compute) -> DataFrame:
         """Resume semantics: committed snapshot short-circuits the stage."""
         if self.is_committed(name):
             self.metrics[name] = {"resumed": True}
             return self.load(name)
-        return self.save(name, compute(), partition_by=partition_by)
+        return self.save(name, compute())
 
     def invalidate(self, name: str) -> None:
         path = self._path(name)

@@ -512,3 +512,23 @@ def test_ivfpq_index_partition_pruned_and_equal(spark, tmp_path):
     assert [(r.id, round(r.score, 6)) for r in got.collect()] == [
         (r.id, round(r.score, 6)) for r in want.collect()
     ]
+
+
+@pytest.mark.parametrize(
+    "rows, bad_col",
+    [
+        ([(1, [1.0, 0.0], [1.0, 0.0]), (2, None, [0.0, 1.0])], "va"),
+        ([(1, [1.0, 0.0], [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0], [0.0, 1.0, 0.0, 0.0])], "vb"),
+        ([(1, [1.0, 0.0], [1.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0])], "va"),
+    ],
+    ids=["null", "dims_differ_across_columns", "ragged_rows"],
+)
+def test_cosine_pairs_arrow_rejects_null_and_ragged_vectors(spark, rows, bad_col):
+    """A null vector, or rows of lengths 2 and 4 (whose flattened total still
+    divides by the row count), must fail naming the column instead of
+    silently pairing the wrong values."""
+    from knowledge_nexus_spark.functions.embed import cosine_pairs_arrow
+
+    df = spark.createDataFrame(rows, "id int, va array<float>, vb array<float>").coalesce(1)
+    with pytest.raises(Exception, match=f"ValueError: cosine_pairs_arrow: column '{bad_col}'"):
+        cosine_pairs_arrow(df, "va", "vb").collect()
