@@ -1,44 +1,16 @@
-"""Scaling-efficiency evidence for BENCH/BASELINE.md (BASELINE.json
-north_rule: ≥0.8 throughput scaling efficiency from N to 4N executors).
+"""Host-load canary for the benchmark records.
 
-Sandbox protocol: the full KG pipeline runs on a ``local-cluster`` with
-N=1 and 4N=4 SEPARATE executor JVMs (2 cores / 6 GiB each) over the same
-persisted corpus — unlike local[K] threads, executors have independent
-heaps/GC and exchange shuffle blocks, which is how a real cluster scales.
-Each configuration runs in its own subprocess (a fresh JVM —
-local-cluster mode does not co-exist with a previously-stopped local
-context in one gateway).
+``cpu_probe`` runs a fixed single-core Python loop and reports its
+throughput; ``bench.py`` records it next to every run, so a record taken
+while other tenants burned CPU shows the dip instead of hiding it.
 
-Measurement protocol (round 3 — interleaved pairs): P pairs; each pair
-runs ONE timed N run then ONE timed 4N run back-to-back (~3 minutes
-apart, fresh JVM each, codegen primed by an untimed small-slice run of
-the same plan). The headline is the MEDIAN of the per-pair efficiencies,
-ALL pairs reported. Rationale: this shared VM shows external load bursts
-on ~10-minute scales (round-3 run C measured 3x wall swings on identical
-runs); round 2's session pairing put the five N runs ~15 minutes away
-from the five 4N runs, so a burst inside one half skews the ratio. With
-adjacent pairing a burst hits both sides of a pair and mostly cancels in
-the ratio; the cross-pair median rides over pairs that straddle a burst
-edge. A single-core fixed-work probe runs before each half and is
-reported per pair, so external contention is visible in the record
-rather than inferred. Corpus generation is excluded from every timed
-window. Nothing is dropped.
-
-Usage: python bench_scaling.py [n_docs] [pairs]
-       (defaults 600000, 6)
-Writes BENCH/BASELINE.md and prints a JSON summary line.
+Usage: python bench_scaling.py [seconds]   (prints units/sec)
 """
 
 from __future__ import annotations
 
-import json
-import os
-import statistics
-import subprocess
 import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def cpu_probe(seconds: float = 1.5) -> float:
@@ -54,245 +26,5 @@ def cpu_probe(seconds: float = 1.5) -> float:
     return round(n / (time.perf_counter() - t0), 1)
 
 
-# Shared gate protocol constants (used by scripts/scaling_hunter.py and
-# scripts/gated_bench.py — single source so the two can't drift): the
-# gate is one timed 4-executor reference job over a 100k-doc corpus;
-# quiet band <= 24 s (quiet host ~15-20 s, contended 40-200 s).
-GATE_DOCS = 100_000
-GATE_QUIET_S = 24.0
-SLEEP_BETWEEN_GATES_S = 45.0
-
-
-def run_config(
-    n_executors: int, corpus_path: str, repeats: int = 1, exec_cores: int = 2
-) -> dict:
-    """One measured configuration, in a fresh subprocess/JVM.
-
-    ``exec_cores`` is passed explicitly on the subprocess argv (round-5
-    ADVICE: the previous KNX_EXEC_CORES env mutation around call sites
-    could leak into reference gates on any non-RuntimeError exception).
-
-    Raises RuntimeError (never IndexError/JSONDecodeError) when the
-    subprocess dies, times out, or emits no result line — a multi-hour
-    unattended hunt must be able to catch ONE failed run, log it, and
-    keep hunting instead of crashing with no record."""
-    try:
-        out = subprocess.run(
-            [
-                sys.executable, __file__, "--run",
-                str(n_executors), corpus_path, str(repeats), str(exec_cores),
-            ],
-            capture_output=True,
-            text=True,
-            timeout=3000,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-    except subprocess.TimeoutExpired as e:
-        raise RuntimeError(f"run_config({n_executors}x) timed out after {e.timeout}s")
-    lines = out.stdout.strip().splitlines()
-    if out.returncode != 0 or not lines:
-        tail = (out.stderr or "")[-800:]
-        raise RuntimeError(
-            f"run_config({n_executors}x) rc={out.returncode}, stderr tail: {tail}"
-        )
-    try:
-        return json.loads(lines[-1])
-    except json.JSONDecodeError:
-        raise RuntimeError(
-            f"run_config({n_executors}x) emitted no JSON result line: {lines[-1]!r}"
-        )
-
-
-def _run_single(
-    n_executors: int, corpus_path: str, repeats: int, exec_cores: int = 2
-) -> None:
-    from knowledge_nexus_spark.pipeline import PipelineConfig, build_graph
-    from knowledge_nexus_spark.session import get_spark
-
-    # Executor shape: 2 cores / 6 GiB each by default. 4N = 8 total cores
-    # stays well inside the host's memory-bandwidth capacity, so the
-    # comparison measures the PLAN's executor scaling (the quantity the
-    # north rule names); the 4-core-executor variant saturates the single
-    # host's shared DRAM at 4N and under-measures it (see
-    # BENCH/BASELINE.md). KNX_EXEC_CORES=1 continues that same argument
-    # one step: 1-core executors (4N = 4 total cores) halve the shared-bus
-    # pressure again, isolating executor-count scaling from the one
-    # resource a real cluster does NOT share across nodes (each node has
-    # its own DRAM; this single box has one bus for all executors).
-    # Memory per executor is unchanged in both variants.
-    # exec_cores arrives on the argv (no env channel — see run_config);
-    # shuffle partitions sized by DATA, identical in both configs
-    spark = get_spark(
-        f"knx-scaling-{n_executors}x",
-        master=f"local-cluster[{n_executors},{exec_cores},6144]",
-        shuffle_partitions=64,
-        extra_conf={
-            "spark.executor.memory": "6g",
-            # the honest 10^12-doc configuration: the node-id set can never
-            # be broadcast at target scale, so the orphan semi-joins must be
-            # shuffle joins (whose hub-key skew AQE splits — session.py
-            # thresholds); a driver-built broadcast would also serialize
-            # hash-table construction, under-measuring executor scaling
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            # finer input splits: at 128 MB the 1.2M-doc corpus packs into
-            # 8 scan tasks — exactly one wave at 4N (8 cores), so a single
-            # slow split extends the whole stage with zero work-stealing
-            # slack. 32 MB gives ~32 splits: 4 waves at 4N, same at N.
-            "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
-        },
-    )
-    docs = spark.read.parquet(corpus_path)
-
-    def one_run(input_df) -> tuple[float, int]:
-        from threading import Thread
-
-        t0 = time.perf_counter()
-        res = build_graph(spark, input_df, PipelineConfig(render_content=True))
-        # run the two independent sinks CONCURRENTLY — on a cluster the
-        # nodes table and the edges table are separate writers; overlapping
-        # them hides per-stage barriers instead of summing them. The shared
-        # persisted intermediates are computed once (BlockManager holds a
-        # per-block write lock, so racing jobs never duplicate a partition).
-        out = {}
-
-        def w_nodes():
-            res.nodes.write.format("noop").mode("overwrite").save()
-
-        def w_edges():
-            out["n"] = res.edges.count()
-
-        t1, t2 = Thread(target=w_nodes), Thread(target=w_edges)
-        t1.start(); t2.start(); t1.join(); t2.join()
-        wall = time.perf_counter() - t0
-        res.unpersist()
-        return wall, out["n"]
-
-    # untimed prime, two parts: (a) a small-slice pipeline run triggers
-    # whole-stage codegen + executor warmup at ~1/20 full-run cost;
-    # (b) a full corpus scan pulls the parquet into the OS page cache —
-    # without it the first timed run measures cold-disk I/O, which on this
-    # throttled cloud disk dwarfs compute (a 30 s 4N run became 296 s) and
-    # measures storage, not the plan. A long-lived cluster reads hot data;
-    # both configs get identical warm bytes.
-    one_run(docs.limit(30_000))
-    docs.write.format("noop").mode("overwrite").save()
-    samples = [one_run(docs) for _ in range(repeats)]
-    walls = sorted(w for w, _ in samples)
-    n_triples = samples[0][1]
-    med_wall = statistics.median(walls)
-    spark.stop()
-    print(
-        json.dumps(
-            {
-                "executors": n_executors,
-                "cores": n_executors * exec_cores,
-                "wall_sec": round(med_wall, 2),
-                "walls": [round(w, 2) for w in walls],
-                "triples": n_triples,
-                "triples_per_sec": round(n_triples / med_wall, 1),
-            }
-        )
-    )
-
-
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 600_000
-    n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    # honored AND recorded (round-5 ADVICE: a direct run with the env var
-    # set previously wrote an MD/JSON record describing the 2-core shape)
-    exec_cores = int(os.environ.get("KNX_EXEC_CORES", "2"))
-
-    # corpus generated once, persisted, shared by both configs
-    from bench import ensure_corpus
-    from knowledge_nexus_spark.session import get_spark
-
-    gen = get_spark("knx-scaling-gen", master="local[32]", shuffle_partitions=32)
-    corpus_path = ensure_corpus(gen, n_docs)
-    gen.stop()
-
-    pairs = []
-    for k in range(n_pairs):
-        probe_n = cpu_probe()
-        low = run_config(1, corpus_path, exec_cores=exec_cores)   # N executors
-        probe_x4 = cpu_probe()
-        high = run_config(4, corpus_path, exec_cores=exec_cores)  # 4N executors
-        eff = (high["triples_per_sec"] / low["triples_per_sec"]) / 4.0
-        pairs.append(
-            {
-                "pair": k + 1,
-                "n": low,
-                "x4": high,
-                "probe_before_n": probe_n,
-                "probe_before_x4": probe_x4,
-                "efficiency": round(eff, 3),
-            }
-        )
-        print(json.dumps(pairs[-1]), file=sys.stderr)
-
-    effs = [p["efficiency"] for p in pairs]
-    med_eff = round(statistics.median(effs), 3)
-    rep = min(pairs, key=lambda p: abs(p["efficiency"] - med_eff))
-    low, high = rep["n"], rep["x4"]
-
-    summary = {
-        "n_docs": n_docs,
-        "exec_cores": exec_cores,
-        "protocol": f"interleaved pairs={n_pairs}, 1 timed run per config per pair",
-        "paired_efficiencies": effs,
-        "median_efficiency": med_eff,
-        "median_pair": {"n": low, "x4": high},
-        "probes": [[p["probe_before_n"], p["probe_before_x4"]] for p in pairs],
-        "target": 0.8,
-        "pass": med_eff >= 0.8,
-    }
-
-    pair_rows = "\n".join(
-        f"| {p['pair']} | {p['n']['wall_sec']} | {p['x4']['wall_sec']} | "
-        f"{p['n']['triples_per_sec']} | {p['x4']['triples_per_sec']} | "
-        f"{p['probe_before_n']} / {p['probe_before_x4']} | {p['efficiency']:.3f} |"
-        for p in pairs
-    )
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/SCALING_LATEST.md", "w") as f:
-        f.write(
-            f"""## Scaling execution (round 3 protocol — interleaved pairs)
-
-Full pipeline per run (freshness dedup -> single-pass fused projection ->
-bookmark synthesis -> skew-separated orphan semi-joins -> MERGE-distinct
-edges; nodes + edges materialized, sinks overlapped) over the persisted
-{n_docs}-document interleaved-span corpus ({low["triples"]} distinct
-triples), identical bytes in for both configurations.
-
-`local-cluster[N,{exec_cores},6144]`: N=1 vs 4N=4 separate executor JVMs
-({exec_cores} core{"s" if exec_cores != 1 else ""} / 6 GiB each).
-{n_pairs} interleaved pairs; each pair = one timed N run
-then one timed 4N run back-to-back in fresh JVMs (codegen primed by an
-untimed small-slice run). Headline = MEDIAN of per-pair efficiencies,
-all pairs reported, nothing dropped. `probe` = single-core fixed-work
-canary (units/s) before each half — dips reveal external tenant load.
-
-| pair | N wall (s) | 4N wall (s) | N tps | 4N tps | probe N / 4N | efficiency |
-|---|---|---|---|---|---|---|
-{pair_rows}
-
-**Median paired scaling efficiency (N -> 4N executors) = {med_eff:.3f}**
-(target >= 0.8 — {"PASS" if med_eff >= 0.8 else "see the host-contention analysis in BENCH/BASELINE.md"}).
-
-Median pair detail: N = {low["wall_sec"]} s ({low["triples_per_sec"]}
-triples/sec), 4N = {high["wall_sec"]} s ({high["triples_per_sec"]}
-triples/sec).
-"""
-        )
-    print(json.dumps(summary))
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--run":
-        _run_single(
-            int(sys.argv[2]),
-            sys.argv[3],
-            int(sys.argv[4]),
-            int(sys.argv[5]) if len(sys.argv) > 5 else 2,
-        )
-    else:
-        main()
+    print(cpu_probe(float(sys.argv[1]) if len(sys.argv) > 1 else 1.5))

@@ -15,7 +15,7 @@ Layout:
   operators/     — composed DataFrame operators (graph ops, dedup,
                    similarity, connected components, entity linking)
   pipeline.py    — checkpointed multi-stage KG pipeline with metrics/resume
-  storage/       — snapshot checkpoints + merge-style sinks
+  storage/       — snapshot checkpoints + the bucketed MERGE
   streaming/     — incremental ingest (Structured Streaming)
 """
 

@@ -5,19 +5,17 @@ Per-kind templates mirror graph_rag/data_source/to_markdown_parser.py:95-348
 before the block content — notion_provider.py:152-162). The default
 exclusion lists from config/config.yaml:22-34 are applied.
 
-Executed as ONE Arrow-vectorized pandas UDF over the spans array column —
-parallelism is across documents, per-doc rendering is a cheap sequential
-string fold (exactly the per-page loop shape of the reference, minus the
-network). Span order is preserved: the fold iterates the array in order.
+Executed as ONE native expression over the spans array column
+(``render_spans_native``, inside pipeline.fused_docs_projection) —
+parallelism is across documents, per-doc rendering is a fold over the
+array that preserves span order. ``render_spans_py`` / ``fold_runs_py``
+are the plain-Python reference of the same templates, pinned equal to the
+native render by test.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 INDENT = "  "  # config.yaml:21 markdown_parser_options.indent
 
@@ -87,12 +85,6 @@ def fold_runs_py(runs: list[dict] | None) -> str:
     return out
 
 
-def runs_plain_py(runs: list[dict] | None) -> str:
-    """Annotation-free concat (notion_provider.py:51-52) — the context/
-    triple side of a rich_runs span."""
-    return "".join((rt.get("plain_text") or "") for rt in runs or [])
-
-
 def spans_with_runs(spans_col):
     """Rewrite the spans array with a typed ``runs`` field: the rich_runs
     JSON payload parsed ONCE per span. The fused pipeline projection has
@@ -119,7 +111,7 @@ def spans_with_runs(spans_col):
 
 def fold_runs_arr_expr(runs_col):
     """`fold_runs_py` over an ALREADY-PARSED runs array: per-run CASE wraps
-    → concat_ws. Exact parity with the pandas fold is test-pinned."""
+    → concat_ws. Exact parity with `fold_runs_py` is test-pinned."""
     runs = runs_col
 
     def flag(r, name):
@@ -146,12 +138,6 @@ def fold_runs_arr_expr(runs_col):
         ).otherwise(content)
 
     return F.concat_ws("", F.transform(F.coalesce(runs, F.array().cast(RUNS_DDL)), fold))
-
-
-def fold_runs_expr(text_col):
-    """`fold_runs_py` from the raw JSON text (parses inline — used by the
-    standalone render path; the fused pipeline passes pre-parsed runs)."""
-    return fold_runs_arr_expr(F.from_json(text_col, RUNS_DDL))
 
 
 def _render_block(kind: str, text: str, media_ref: str, offset: int) -> str:
@@ -309,23 +295,15 @@ def render_spans_py(spans: list | None) -> str:
     return header + body
 
 
-@F.pandas_udf(T.StringType())
-def render_spans(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for spans_series in it:
-        yield spans_series.map(render_spans_py)
-
-
-def render_spans_native(spans_col, runs_parsed: bool = False):
-    """The same render as ONE native expression: two JVM `aggregate` folds
-    over the span array (properties first, then blocks, like
+def render_spans_native(spans_col):
+    """The same render as ONE native expression: two JVM folds over the
+    span array (properties first, then blocks, like
     notion_provider.py:152-162's ordering) — no Python worker, no Arrow
     transfer. Kept in exact parity with ``render_spans_py`` by test.
 
     Per-kind templates are a CASE expression; the fold preserves span
-    order by construction.
-
-    ``runs_parsed=True``: the spans already carry a typed ``runs`` field
-    (see ``spans_with_runs``) — the rich_runs fold consumes it instead of
+    order by construction. The spans carry a typed ``runs`` field (see
+    ``spans_with_runs``): the rich_runs fold consumes it instead of
     re-parsing the JSON text."""
 
     def txt(s):
@@ -337,17 +315,12 @@ def render_spans_native(spans_col, runs_parsed: bool = False):
     def ind(s):
         return F.repeat(F.lit(INDENT), F.coalesce(s["offset"], F.lit(0)))
 
-    def runs_md(s):
-        if runs_parsed:
-            return fold_runs_arr_expr(s["runs"])
-        return fold_runs_expr(txt(s))
-
     def block_md(s):
         k = s["kind"]
         cap_sfx = F.when(txt(s) != "", F.concat(F.lit(" - "), txt(s))).otherwise(F.lit(""))
         return (
             F.when(k == "paragraph", F.concat(ind(s), txt(s), F.lit("\n\n")))
-            .when(k == "rich_runs", F.concat(ind(s), runs_md(s), F.lit("\n\n")))
+            .when(k == "rich_runs", F.concat(ind(s), fold_runs_arr_expr(s["runs"]), F.lit("\n\n")))
             .when(
                 k.isin("heading_1", "heading_2", "heading_3"),
                 F.concat(ind(s), F.repeat(F.lit("#"), F.substring(k, -1, 1).cast("int")),

@@ -18,8 +18,16 @@ two-phase partial aggregation which Spark does map-side automatically.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def edit_time(col: Column) -> Column:
+    """``last_edited_time`` parsed to a timestamp, so versions compare by
+    instant across UTC offsets (a raw-string compare ranks
+    ``10:00+0200`` after ``09:00Z``). Every freshness decision —
+    dedup, refresh's change diff, the stream's admission — uses it."""
+    return F.to_timestamp(col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
 
 
 def _freshness_window(documents: DataFrame) -> DataFrame:
@@ -37,10 +45,7 @@ def _freshness_window(documents: DataFrame) -> DataFrame:
     # an inline to_timestamp would be re-parsed per sort comparison
     # evaluation (two Window operators share the exchange but not the
     # sort expression) — results identical, the column is dropped after.
-    staged = documents.withColumn(
-        "_pts",
-        F.to_timestamp(F.col("last_edited_time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX"),
-    )
+    staged = documents.withColumn("_pts", edit_time(F.col("last_edited_time")))
     order = [
         F.col("_pts").desc_nulls_last(),
         F.col("last_edited_time").desc_nulls_last(),

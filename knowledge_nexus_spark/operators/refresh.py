@@ -26,7 +26,8 @@ docs), never O(corpus):
 Each refresh: freshness-dedup the incoming snapshot → diff against meta →
 re-extract (and re-chunk) changed docs only (same fused single-pass
 projection as build_graph) → per-table keyed delete+insert touching only
-the changed keys' buckets → derive the output graph (bookmark nodes from
+the changed keys' buckets (storage.merge.merge_bucketed, the same MERGE
+the stream sink runs) → derive the output graph (bookmark nodes from
 merged burls, orphan policy, distinct edges). The derived graph equals a
 full rebuild over the new corpus by construction; tests pin that
 equality, the exactly-K re-extraction count, and that only the touched
@@ -45,20 +46,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from knowledge_nexus_spark.functions.extract import (
-    bookmark_nodes,
-    normalize_uuid_col,
-)
+from knowledge_nexus_spark.functions.extract import bookmark_nodes
+from knowledge_nexus_spark.functions.ids import normalize_uuid
 from knowledge_nexus_spark.operators.graphops import (
     add_missing_nodes,
     clean_orphans,
     distinct_triples,
+    edit_time,
     freshness_dedup,
     page_nodes,
 )
 from knowledge_nexus_spark.pipeline import PipelineConfig
 from knowledge_nexus_spark.schema import CHUNKS_SCHEMA, TRIPLES_SCHEMA
-from knowledge_nexus_spark.streaming.ingest import _bucket_of, _snapshot_exists
+from knowledge_nexus_spark.storage.merge import merge_bucketed, read_bucketed, snapshot_exists
 
 # Declared schemas for every state table (Iceberg tables carry explicit
 # schemas; parquet footer inference is the sandbox-emulation artifact and
@@ -90,19 +90,9 @@ def _state_schemas():
     }
 
 
-def _read_state(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bucket-partitioned state table with its DECLARED schema —
-    never footer inference — so an empty table (zero part files) reads as
-    an empty DataFrame instead of throwing. Partition pruning on `bucket`
-    is unaffected: the partition column is appended to the read schema."""
-    from pyspark.sql import types as T
-
-    table = path.rstrip("/").rsplit("/", 1)[-1]
-    base = _state_schemas()[table]
-    schema = T.StructType(
-        base.fields + [T.StructField("bucket", T.IntegerType(), True)]
-    )
-    return spark.read.schema(schema).parquet(path)
+def _read_state(spark: SparkSession, state_dir: str, table: str) -> DataFrame:
+    """One state table, read with its declared schema (see read_bucketed)."""
+    return read_bucketed(spark, f"{state_dir}/{table}", _state_schemas()[table])
 
 
 @dataclass
@@ -111,19 +101,6 @@ class RefreshResult:
     edges: DataFrame
     n_changed: int  # docs re-extracted this refresh (== corpus size on init)
     chunks: DataFrame | None = None  # only when cfg.with_chunks
-
-
-def _delete_partition_dirs(spark: SparkSession, root: str, buckets: list[int]) -> None:
-    """Remove bucket partition dirs that became empty (dynamic overwrite
-    only rewrites partitions PRESENT in the output, so a fully-deleted
-    bucket would otherwise keep its stale files)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(f"{root}/bucket={b}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
 
 
 def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
@@ -145,7 +122,7 @@ def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
 
     exploded = combined.select(
         "doc_id",
-        normalize_uuid_col(F.col("doc_id")).alias("subj"),
+        normalize_uuid(F.col("doc_id")).alias("subj"),
         F.explode("_tris").alias("t"),
     )
     triples = exploded.select("subj", "t.pred", "t.obj", "t.context")
@@ -155,49 +132,6 @@ def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
         .dropDuplicates(["doc_id", "url"])
     )
     return combined, meta, nodes, triples, burls
-
-
-def _merge_bucketed(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    new_rows: DataFrame,
-    changed_keys: DataFrame,
-    has_state: bool,
-) -> None:
-    """Keyed delete+insert into a bucket-partitioned parquet state table.
-
-    Only the buckets the changed keys hash into are read (partition-pruned
-    scan) and rewritten (dynamic partition overwrite) — every new row's key
-    is among changed_keys by construction, so its bucket is always touched.
-    Buckets whose content disappears entirely are deleted explicitly
-    (dynamic overwrite only rewrites partitions PRESENT in the output).
-    This is the parquet emulation of an Iceberg MERGE INTO's file pruning:
-    work per refresh is O(changed ∪ touched buckets), never O(corpus)."""
-    new_rows = new_rows.withColumn("bucket", _bucket_of(F.col(key_col)))
-    if not has_state:
-        new_rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        return
-    keys = changed_keys.withColumn("bucket", _bucket_of(F.col(key_col)))
-    touched = sorted(r.bucket for r in keys.select("bucket").distinct().collect())
-    if not touched:
-        return
-    stored = (
-        _read_state(spark, path)
-        .filter(F.col("bucket").isin(touched))  # partition-pruned scan
-        .join(keys.select(key_col), key_col, "left_anti")
-    )
-    # localCheckpoint breaks the read→overwrite cycle on the state files
-    merged = stored.unionByName(new_rows).localCheckpoint(eager=True)
-    out_buckets = {r.bucket for r in merged.select("bucket").distinct().collect()}
-    emptied = [b for b in touched if b not in out_buckets]
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    _delete_partition_dirs(spark, path, emptied)
 
 
 def refresh_updated(
@@ -216,26 +150,19 @@ def refresh_updated(
     derived (nodes, edges[, chunks]) plus the count of re-extracted docs —
     the per-stage lineage metric the reference logs."""
     cfg = cfg or PipelineConfig()
-    meta_p, nodes_p = f"{state_dir}/meta", f"{state_dir}/nodes"
-    tri_p, burl_p = f"{state_dir}/triples", f"{state_dir}/burls"
-    chunk_p = f"{state_dir}/chunks"
 
     latest = freshness_dedup(incoming)
-    has_state = _snapshot_exists(spark, meta_p)
+    has_state = snapshot_exists(spark, f"{state_dir}/meta")
 
     if has_state:
-        stored_meta = _read_state(spark, meta_p)
-        prev = stored_meta.select(
+        prev = _read_state(spark, state_dir, "meta").select(
             F.col("doc_id"), F.col("last_edited_time").alias("_stored_ts")
         )
         changed = (
             latest.join(prev, "doc_id", "left")
             .filter(
                 F.col("_stored_ts").isNull()
-                | (
-                    F.to_timestamp(F.col("last_edited_time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
-                    > F.to_timestamp(F.col("_stored_ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
-                )
+                | (edit_time(F.col("last_edited_time")) > edit_time(F.col("_stored_ts")))
             )
             .drop("_stored_ts")
         )
@@ -247,10 +174,10 @@ def refresh_updated(
 
     def _result() -> RefreshResult:
         return RefreshResult(
-            nodes=_derive_nodes(spark, nodes_p, burl_p),
+            nodes=_derive_nodes(spark, state_dir),
             edges=_derive_edges(spark, state_dir, cfg),
             n_changed=n_changed,
-            chunks=_read_state(spark, chunk_p).drop("bucket")
+            chunks=_read_state(spark, state_dir, "chunks").drop("bucket")
             if cfg.with_chunks
             else None,
         )
@@ -260,16 +187,18 @@ def refresh_updated(
 
     changed_ids = meta.select("doc_id")  # lineage is cut at `combined`
 
-    _merge_bucketed(spark, meta_p, "doc_id", meta, changed_ids, has_state)
-    _merge_bucketed(
-        spark, nodes_p, "id", nodes,
-        changed_ids.select(F.col("doc_id").alias("id")), has_state,
-    )
-    _merge_bucketed(spark, burl_p, "doc_id", burls, changed_ids, has_state)
-    _merge_bucketed(
-        spark, tri_p, "subj", triples,
-        changed_ids.select(normalize_uuid_col(F.col("doc_id")).alias("subj")),
-        has_state,
+    def merge(table: str, key_col: str, rows: DataFrame, keys: DataFrame) -> None:
+        merge_bucketed(
+            spark, f"{state_dir}/{table}", key_col, rows, keys,
+            _state_schemas()[table], has_state,
+        )
+
+    merge("meta", "doc_id", meta, changed_ids)
+    merge("nodes", "id", nodes, changed_ids.select(F.col("doc_id").alias("id")))
+    merge("burls", "doc_id", burls, changed_ids)
+    merge(
+        "triples", "subj", triples,
+        changed_ids.select(normalize_uuid(F.col("doc_id")).alias("subj")),
     )
     if cfg.with_chunks:
         from knowledge_nexus_spark.operators.chunking import chunk_and_embed
@@ -277,25 +206,27 @@ def refresh_updated(
         new_chunks = chunk_and_embed(
             nodes, cfg.chunk_size, cfg.chunk_overlap, cfg.embedding_dim
         )
-        _merge_bucketed(
-            spark, chunk_p, "page_id", new_chunks,
-            changed_ids.select(F.col("doc_id").alias("page_id")), has_state,
+        merge(
+            "chunks", "page_id", new_chunks,
+            changed_ids.select(F.col("doc_id").alias("page_id")),
         )
 
     return _result()
 
 
-def _derive_nodes(spark: SparkSession, nodes_p: str, burl_p: str) -> DataFrame:
-    page = _read_state(spark, nodes_p).drop("bucket")
-    urls = _read_state(spark, burl_p).select(F.col("url").alias("id")).distinct()
+def _derive_nodes(spark: SparkSession, state_dir: str) -> DataFrame:
+    page = _read_state(spark, state_dir, "nodes").drop("bucket")
+    urls = _read_state(spark, state_dir, "burls").select(F.col("url").alias("id")).distinct()
     return page.unionByName(bookmark_nodes(urls))
 
 
+def _state_triples(spark: SparkSession, state_dir: str) -> DataFrame:
+    return _read_state(spark, state_dir, "triples").select("subj", "pred", "obj", "context")
+
+
 def _derive_edges(spark: SparkSession, state_dir: str, cfg: PipelineConfig) -> DataFrame:
-    triples = _read_state(spark, f"{state_dir}/triples").select(
-        "subj", "pred", "obj", "context"
-    )
-    nodes = _derive_nodes(spark, f"{state_dir}/nodes", f"{state_dir}/burls")
+    triples = _state_triples(spark, state_dir)
+    nodes = _derive_nodes(spark, state_dir)
     if cfg.create_unprocessed:
         kept = triples
     else:
@@ -306,8 +237,4 @@ def _derive_edges(spark: SparkSession, state_dir: str, cfg: PipelineConfig) -> D
 def refresh_missing_nodes(spark: SparkSession, state_dir: str, cfg: PipelineConfig) -> DataFrame:
     """Unprocessed-node synthesis over the refreshed state (J2), for the
     create_unprocessed configuration."""
-    triples = _read_state(spark, f"{state_dir}/triples").select(
-        "subj", "pred", "obj", "context"
-    )
-    nodes = _derive_nodes(spark, f"{state_dir}/nodes", f"{state_dir}/burls")
-    return add_missing_nodes(triples, nodes)
+    return add_missing_nodes(_state_triples(spark, state_dir), _derive_nodes(spark, state_dir))

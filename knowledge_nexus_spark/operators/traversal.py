@@ -6,13 +6,13 @@ recursing into unvisited targets, depth-capped at
 config.page_max_depth=200; REFERENCES targets recurse only when
 recursive_process_reference_pages, config.yaml:19).
 
-Set-wise rebuild: extract ALL links once (one codegen pass — on Spark a
-single full scan beats per-page point reads), restrict the link graph to
-corpus doc ids, then run an **iterative frontier BFS as a DataFrame
-loop**: frontier ⋈ edges → new targets, anti-join visited, union,
-localCheckpoint per round. Hop depth stands in for the reference's
-recursion depth (a guard, not a semantic — the default 200 never binds on
-real corpora).
+Set-wise rebuild: extract ALL links once (the pipeline's fused
+projection, one codegen pass — on Spark a single full scan beats
+per-page point reads), restrict the link graph to corpus doc ids, then
+run an **iterative frontier BFS as a DataFrame loop**: frontier ⋈ edges
+→ new targets, anti-join visited, union, localCheckpoint per round. Hop
+depth stands in for the reference's recursion depth (a guard, not a
+semantic — the default 200 never binds on real corpora).
 
 Scale: each round is one shuffle of the (narrow) frontier against the
 link edges; rounds ≤ graph diameter. The visited set stays
@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from knowledge_nexus_spark.functions.extract import extract_triples_native
 from knowledge_nexus_spark.functions.ids import normalize_uuid
-from knowledge_nexus_spark.operators.graphops import content_docs, freshness_dedup
+from knowledge_nexus_spark.operators.graphops import freshness_dedup
+from knowledge_nexus_spark.pipeline import PipelineConfig, fused_docs_projection, projection_graph
 
 
 def reachable_docs(
@@ -42,11 +42,11 @@ def reachable_docs(
     are followed only when ``follow_references``
     (notion_provider.py:170-171). Targets outside the corpus (bookmarks,
     dangling uuids) never enter the frontier."""
-    spark = documents.sparkSession
     docs = freshness_dedup(documents)
     doc_ids = docs.select(normalize_uuid(F.col("doc_id")).alias("id")).distinct()
 
-    triples = extract_triples_native(content_docs(docs))
+    cfg = PipelineConfig(render_content=False)
+    _, triples = projection_graph(fused_docs_projection(docs, cfg), cfg)
     preds = ["CONTAINS", "REFERENCES"] if follow_references else ["CONTAINS"]
     edges = (
         triples.filter(F.col("pred").isin(preds))

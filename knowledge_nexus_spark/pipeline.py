@@ -28,8 +28,8 @@ from knowledge_nexus_spark.functions.extract import (
     TRIPLE_ARRAY_DDL,
     bookmark_nodes,
     doc_triples_expr,
-    normalize_uuid_col,
 )
+from knowledge_nexus_spark.functions.ids import normalize_uuid
 from knowledge_nexus_spark.functions.render import render_spans_native, spans_with_runs
 from knowledge_nexus_spark.operators.graphops import (
     add_missing_nodes,
@@ -103,14 +103,14 @@ def _projection_columns(sc, render_content: bool) -> tuple:
             del _PROJECTION_COLUMNS[stale]
         processed_pred = ~F.col("archived") & ~F.col("in_trash")
         content = (
-            F.when(processed_pred, render_spans_native(F.col("spans"), runs_parsed=True))
+            F.when(processed_pred, render_spans_native(F.col("spans")))
             if render_content
             else F.lit(None).cast("string")
         )
         cols = _PROJECTION_COLUMNS[key] = (
             spans_with_runs(F.col("spans")).alias("spans"),
             content.alias("content"),
-            F.when(processed_pred, doc_triples_expr(F.col("spans"), runs_parsed=True))
+            F.when(processed_pred, doc_triples_expr(F.col("spans")))
             .otherwise(F.array().cast(TRIPLE_ARRAY_DDL))
             .alias("_tris"),
         )
@@ -130,8 +130,9 @@ def fused_docs_projection(docs: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     multiply-referenced), the second folds content + triples from the
     parsed spans. Bookmark urls ride INSIDE the triple array (the ``bm``
     flag), so one extraction pass serves both the edges and the bookmark
-    branch. Shared by build_graph, run_pipeline and the incremental
-    refresh."""
+    branch. Shared by build_graph, run_pipeline, the incremental refresh,
+    the stream sink and root-scoped traversal — the library's only triple
+    extraction."""
     parse, content, tris = _projection_columns(
         docs.sparkSession.sparkContext, cfg.render_content
     )
@@ -143,7 +144,7 @@ def projection_graph(combined: DataFrame, cfg: PipelineConfig) -> tuple[DataFram
     the rendered content plus one Bookmark node per distinct ``bm``-flagged
     url, and the per-encounter triples (the explode of ``_tris``)."""
     exploded = combined.select(
-        normalize_uuid_col(F.col("doc_id")).alias("subj"),
+        normalize_uuid(F.col("doc_id")).alias("subj"),
         F.explode("_tris").alias("t"),
     )
     triples_raw = exploded.select("subj", "t.pred", "t.obj", "t.context")

@@ -88,6 +88,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # ORDER BY + LIMIT n plans an in-memory top-K that allocates 2n
+        # slots per task up front: comention_strength(top_n=10**9) took a
+        # 4-core test JVM from 1 GB to 9 GB RSS and got the JVM OOM-killed
+        # on a 16 GB host. Above this n Spark uses its spilling global sort
+        # instead; every limit the library plans is far below it.
+        .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

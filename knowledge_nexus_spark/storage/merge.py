@@ -1,78 +1,102 @@
-"""Batch MERGE sinks — the Iceberg MERGE INTO emulation (S9-S11, J3).
+"""The bucketed MERGE — keyed delete+insert into a bucket-partitioned
+parquet table (S9-S11, J3), shared by batch refresh and the stream sink.
 
-Reference semantics being reproduced:
-  - node upsert: MERGE by id, update only when the incoming
-    last_edited_time differs/newer (neo4j_manager.py:172-206, J3)
-  - chunk sink: delete the page's old chunks, insert the new set with
-    sequence numbers (partition overwrite keyed by page_id,
-    neo4j_manager.py:208-228, S10)
-  - edge merge: distinct on (subj, pred, obj, context)
-    (neo4j_manager.py:230-238, S11)
-
-In production these are literal `MERGE INTO` / `overwritePartitions` on
-Iceberg tables; the sandbox emulation is union + window / anti-join with
-the same row-level outcome, written via write-then-swap for idempotency
-under retries.
+Every table is hash-partitioned on ``bucket = pmod(xxhash64(key), N)``.
+A merge reads (partition-pruned) and rewrites (dynamic partition
+overwrite) ONLY the buckets its changed keys hash into, so work per merge
+is O(changed ∪ touched buckets), never O(table) — the parquet emulation of
+an Iceberg ``MERGE INTO``'s file-level pruning. In production this is a
+literal ``MERGE INTO`` / ``overwritePartitions`` on Iceberg tables.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+N_BUCKETS = 64
 
 
-def merge_nodes(existing: DataFrame | None, updates: DataFrame) -> DataFrame:
-    """Last-writer-wins node upsert: an update replaces a stored node only
-    when strictly newer (equal timestamps keep the stored row —
-    neo4j_manager.py:185 skips the write)."""
-    updates = updates.withColumn("_prio", F.lit(0))
-    if existing is None:
-        merged = updates
-    else:
-        merged = existing.withColumn("_prio", F.lit(1)).unionByName(updates)
-    w = Window.partitionBy("id").orderBy(
-        F.to_timestamp(F.col("last_edited_time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
-        .desc_nulls_last(),
-        F.col("_prio").desc(),  # ties prefer the stored row
-    )
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_prio")
-    )
+def bucket_of(col: Column) -> Column:
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
-def overwrite_page_chunks(existing: DataFrame | None, new_chunks: DataFrame) -> DataFrame:
-    """Partition overwrite by page_id: all old chunks of updated pages are
-    replaced by the new set (delete+insert, S10)."""
-    if existing is None:
-        return new_chunks
-    updated_pages = new_chunks.select("page_id").distinct()
-    kept = existing.join(updated_pages, "page_id", "left_anti")
-    return kept.unionByName(new_chunks)
+def _fs_path(spark: SparkSession, path: str):
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
 
-def destructive_reset(spark, *table_paths: str) -> int:
-    """S13 — the reference's `MATCH (n) DETACH DELETE n` wipe
-    (neo4j_manager.py:147-150): drop every given graph table directory.
-    Hadoop FS API so it works on any scheme (file, hdfs, s3a). Returns the
-    number of paths that existed and were removed. In production this is
-    `DROP TABLE` / `TRUNCATE` on the Iceberg catalog."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    removed = 0
-    for path in table_paths:
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
+def snapshot_exists(spark: SparkSession, path: str) -> bool:
+    """The dynamic-partition-overwrite committer writes NO root _SUCCESS
+    marker — a snapshot exists iff the root holds bucket partition dirs.
+    Hadoop FS API, so it holds on any scheme (file, hdfs, s3a)."""
+    jroot, fs = _fs_path(spark, path)
+    if not fs.exists(jroot):
+        return False
+    glob = fs.globStatus(spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path + "/bucket=*"))
+    return glob is not None and len(glob) > 0
+
+
+def read_bucketed(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read a bucketed table with its DECLARED schema — never footer
+    inference — so an empty table (zero part files) reads as an empty
+    DataFrame instead of throwing UNABLE_TO_INFER_SCHEMA. Partition
+    pruning on ``bucket`` is unaffected: the partition column is appended
+    to the read schema."""
+    full = T.StructType(schema.fields + [T.StructField("bucket", T.IntegerType(), True)])
+    return spark.read.schema(full).parquet(path)
+
+
+def _delete_partition_dirs(spark: SparkSession, root: str, buckets: list[int]) -> None:
+    """Remove bucket partition dirs that became empty (dynamic overwrite
+    only rewrites partitions PRESENT in the output, so a fully-deleted
+    bucket would otherwise keep its stale files)."""
+    for b in buckets:
+        p, fs = _fs_path(spark, f"{root}/bucket={b}")
         if fs.exists(p):
             fs.delete(p, True)
-            removed += 1
-    return removed
 
 
-def merge_edges(existing: DataFrame | None, new_edges: DataFrame) -> DataFrame:
-    """Cypher-MERGE-equivalent edge upsert: distinct on the full pattern
-    key incl. context (NULL stored as '')."""
-    new_edges = new_edges.withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-    merged = new_edges if existing is None else existing.unionByName(new_edges)
-    return merged.dropDuplicates(["subj", "pred", "obj", "context"])
+def merge_bucketed(
+    spark: SparkSession,
+    path: str,
+    key_col: str,
+    new_rows: DataFrame,
+    changed_keys: DataFrame,
+    schema: T.StructType,
+    has_state: bool,
+) -> None:
+    """Keyed delete+insert: every stored row whose ``key_col`` is in
+    ``changed_keys`` is replaced by ``new_rows`` (the rows of those keys).
+
+    Only the buckets the changed keys hash into are read and rewritten —
+    every new row's key is among changed_keys by construction, so its
+    bucket is always touched. Buckets whose content disappears entirely
+    are deleted explicitly. Idempotent under retries: a bucket's merged
+    content is a pure function of (stored bucket, changed keys, new rows).
+    Without ``has_state`` the new rows are written as the whole table."""
+    new_rows = new_rows.withColumn("bucket", bucket_of(F.col(key_col)))
+    if not has_state:
+        new_rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        return
+    keys = changed_keys.withColumn("bucket", bucket_of(F.col(key_col)))
+    touched = sorted(r.bucket for r in keys.select("bucket").distinct().collect())
+    if not touched:
+        return
+    stored = (
+        read_bucketed(spark, path, schema)
+        .filter(F.col("bucket").isin(touched))  # partition-pruned scan
+        .join(keys.select(key_col), key_col, "left_anti")
+    )
+    # localCheckpoint breaks the read→overwrite cycle on the table files
+    merged = stored.unionByName(new_rows).localCheckpoint(eager=True)
+    out_buckets = {r.bucket for r in merged.select("bucket").distinct().collect()}
+    emptied = [b for b in touched if b not in out_buckets]
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _delete_partition_dirs(spark, path, emptied)

@@ -5,72 +5,61 @@ The reference's incremental story is batch CDC keyed on last_edited_time
 semantics run continuously: a file-source stream of document batches →
 freshness dedup within the batch → stored-watermark admission (a
 per-subject last_edited_time sidecar rejects out-of-order OLDER document
-versions, refresh.py's strictly-newer CDC guard carried across batches)
-→ triple extraction → ``foreachBatch``
-MERGE into the edges snapshot as a keyed DELETE+INSERT: every triple's
-subj is its source document's normalized id (extract.py:345), so deleting
-the batch documents' subj keys and inserting their re-extracted triples
-is exact last-writer-wins — a re-edited document's REMOVED links (and an
-archived document's whole content) leave the snapshot, matching
-operators/refresh.py's batch semantics. Exactly-once comes from the
-streaming checkpoint + the idempotent merge, mirroring Iceberg MERGE in
-production.
+versions, refresh.py's CDC guard carried across batches) → the triples of
+pipeline.fused_docs_projection (the same extraction as every batch entry
+point) → ``foreachBatch`` MERGE into the edges snapshot as a keyed
+DELETE+INSERT: every triple's subj is its source document's normalized
+id, so deleting the batch documents' subj keys and inserting their
+re-extracted triples is exact last-writer-wins — a re-edited document's
+REMOVED links (and an archived document's whole content) leave the
+snapshot, matching operators/refresh.py's batch semantics. Exactly-once
+comes from the streaming checkpoint + the idempotent merge, mirroring
+Iceberg MERGE in production.
 
-Scale design — the MERGE is PARTITION-SCOPED: the snapshot is hash-
-partitioned on ``bucket = pmod(xxhash64(subj), N)`` and each micro-batch
-reads and rewrites ONLY the partitions its own subjects touch (dynamic
-partition overwrite). Work per batch is O(batch ∪ touched partitions),
-not O(total snapshot), so the stream never falls behind its own history —
-the parquet emulation of an Iceberg MERGE INTO's file-level pruning.
+Scale design — the MERGE is PARTITION-SCOPED: the edges snapshot and its
+watermark sidecar are bucketed tables merged by storage.merge.merge_bucketed
+(the MERGE refresh runs), so each micro-batch reads and rewrites ONLY the
+partitions its own subjects touch. Work per batch is O(batch ∪ touched
+partitions), not O(total snapshot), so the stream never falls behind its
+own history.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from knowledge_nexus_spark.functions.extract import extract_triples_native
-from knowledge_nexus_spark.operators.graphops import content_docs
+from knowledge_nexus_spark.functions.ids import normalize_uuid
+from knowledge_nexus_spark.operators.graphops import distinct_triples, edit_time, freshness_dedup
+from knowledge_nexus_spark.pipeline import PipelineConfig, fused_docs_projection, projection_graph
 from knowledge_nexus_spark.schema import DOCUMENTS_SCHEMA
+from knowledge_nexus_spark.storage.merge import (
+    bucket_of,
+    merge_bucketed,
+    read_bucketed,
+    snapshot_exists,
+)
 
-N_BUCKETS = 64
-_MERGE_KEY = ["subj", "pred", "obj", "context"]
+_EXTRACT_CFG = PipelineConfig(render_content=False)
+
+
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
+_EDGES_SCHEMA = _strings("subj", "pred", "obj", "context")
+_META_SCHEMA = _strings("subj", "last_edited_time")
 
 
 def _meta_path(edges_path: str) -> str:
     """Sidecar per-subject freshness watermark (subj, last_edited_time),
     bucket-partitioned with the SAME hash as the edges snapshot so both
     prune together. This is what makes the MERGE safe under out-of-order
-    delivery: refresh.py guards with a stored-watermark comparison
-    (refresh.py:238-247) and the streaming path must too, or a late batch
-    carrying an OLDER version of a document would delete the newer
-    edges and re-insert stale ones."""
+    delivery: refresh.py guards with a stored-watermark comparison and the
+    streaming path must too, or a late batch carrying an OLDER version of
+    a document would delete the newer edges and re-insert stale ones."""
     return edges_path.rstrip("/") + "_meta"
-
-
-def _bucket_of(col):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
-
-
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    """Existence via the Hadoop FS API — correct on any scheme (s3a, hdfs,
-    file), unlike os.path.exists which only sees the local filesystem."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _snapshot_exists(spark: SparkSession, path: str) -> bool:
-    """The dynamic-partition-overwrite committer writes NO root _SUCCESS
-    marker — a snapshot exists iff the root holds bucket partition dirs."""
-    jvm = spark.sparkContext._jvm
-    jroot = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jroot.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(jroot):
-        return False
-    glob = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path + "/bucket=*"))
-    return glob is not None and len(glob) > 0
 
 
 def merge_edges_batch(batch_df: DataFrame, epoch_id: int, edges_path: str) -> None:
@@ -86,33 +75,30 @@ def merge_edges_batch(batch_df: DataFrame, epoch_id: int, edges_path: str) -> No
 
     Out-of-order-safe: a per-subject watermark sidecar (``_meta_path``)
     stores each document's last applied ``last_edited_time``; batch rows
-    not newer-or-equal than the stored watermark are REJECTED before the
-    delete key set is built, so a late/backfilled batch carrying an older
-    version can never regress the snapshot — the streaming equivalent of
-    refresh.py's strictly-newer CDC filter.
+    whose parsed time (``edit_time``, so UTC offsets compare by instant)
+    is older than the stored watermark are REJECTED before the delete key
+    set is built, so a late/backfilled batch carrying an older version can
+    never regress the snapshot — the streaming equivalent of refresh.py's
+    strictly-newer CDC filter.
 
-    Idempotent under retries: the merged content of a partition is a pure
-    function of (snapshot partition, meta partition, batch) — admission is
-    ``>=`` the stored watermark, so replaying the last batch re-admits the
-    same rows and the anti-join + re-insert rewrites identical bytes; no
-    epoch-suffixed staging dirs to leak."""
-    from knowledge_nexus_spark.functions.extract import normalize_uuid_col
-    from knowledge_nexus_spark.operators.graphops import freshness_dedup
-
+    Idempotent under retries: admission is ``>=`` the stored watermark, so
+    replaying the last batch re-admits the same rows and the merge
+    rewrites identical bytes; no epoch-suffixed staging dirs to leak."""
     spark = batch_df.sparkSession
     meta_path = _meta_path(edges_path)
     latest = freshness_dedup(batch_df).withColumn(
-        "subj", normalize_uuid_col(F.col("doc_id"))
-    ).withColumn("bucket", _bucket_of(F.col("subj")))
+        "subj", normalize_uuid(F.col("doc_id"))
+    ).withColumn("bucket", bucket_of(F.col("subj")))
 
-    if _snapshot_exists(spark, meta_path):
+    has_meta = snapshot_exists(spark, meta_path)
+    if has_meta:
         cand_buckets = [
             r.bucket for r in latest.select("bucket").distinct().collect()
         ]
         if not cand_buckets:
             return
         stored_meta = (
-            spark.read.parquet(meta_path)
+            read_bucketed(spark, meta_path, _META_SCHEMA)
             .filter(F.col("bucket").isin(cand_buckets))  # partition-pruned
             .select("subj", F.col("last_edited_time").alias("_stored_ts"))
         )
@@ -120,81 +106,27 @@ def merge_edges_batch(batch_df: DataFrame, epoch_id: int, edges_path: str) -> No
             latest.join(stored_meta, "subj", "left")
             .filter(
                 F.col("_stored_ts").isNull()
-                | (F.col("last_edited_time") >= F.col("_stored_ts"))
+                | (edit_time(F.col("last_edited_time")) >= edit_time(F.col("_stored_ts")))
             )
             .drop("_stored_ts")
         )
 
-    latest = latest.localCheckpoint(eager=True)
-    subjects = latest.select("subj", "bucket").distinct()
-    touched = [r.bucket for r in subjects.select("bucket").distinct().collect()]
-    if not touched:
-        return
-    new_edges = (
-        extract_triples_native(content_docs(latest.drop("subj", "bucket")))
-        .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-        .dropDuplicates(_MERGE_KEY)
-        .withColumn("bucket", _bucket_of(F.col("subj")))
-        .localCheckpoint(eager=True)
+    # cuts the lineage to the meta files the second merge overwrites
+    latest = latest.drop("bucket").localCheckpoint(eager=True)
+    subjects = latest.select("subj").distinct()
+    _, triples = projection_graph(
+        fused_docs_projection(latest.drop("subj"), _EXTRACT_CFG), _EXTRACT_CFG
     )
-
-    if _snapshot_exists(spark, edges_path):
-        existing = (
-            spark.read.parquet(edges_path)
-            .filter(F.col("bucket").isin(touched))  # partition-pruned scan
-            .select(*_MERGE_KEY, "bucket")
-        )
-        kept = existing.join(subjects.select("subj"), "subj", "left_anti")
-        merged = kept.unionByName(new_edges).dropDuplicates(_MERGE_KEY)
-    else:
-        merged = new_edges
-    # Break the read→overwrite cycle on the snapshot files, then rewrite
-    # ONLY the partitions present in `merged` (the touched buckets).
-    merged = merged.localCheckpoint(eager=True)
-    out_buckets = {r.bucket for r in merged.select("bucket").distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(edges_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # Dynamic overwrite only rewrites partitions PRESENT in the output: a
-    # touched bucket whose content was entirely deleted (every stored subj
-    # re-keyed away, no new edges hashing there) must be removed explicitly
-    # or its stale files survive — same emptied-bucket rule as
-    # operators/refresh.py's _merge_bucketed.
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for b in set(touched) - out_buckets:
-        p = jvm.org.apache.hadoop.fs.Path(f"{edges_path}/bucket={b}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
-
-    # Advance the per-subject watermark sidecar for the admitted docs —
-    # same touched-partitions-only rewrite as the edges themselves. A
-    # touched meta bucket is never emptied (every admitted subj writes a
-    # meta row into its own bucket), so no emptied-bucket sweep here.
-    new_meta = latest.groupBy("subj", "bucket").agg(
-        F.max("last_edited_time").alias("last_edited_time")
+    merge_bucketed(
+        spark, edges_path, "subj", distinct_triples(triples), subjects, _EDGES_SCHEMA,
+        snapshot_exists(spark, edges_path),
     )
-    if _snapshot_exists(spark, meta_path):
-        kept_meta = (
-            spark.read.parquet(meta_path)
-            .filter(F.col("bucket").isin(touched))
-            .select("subj", "last_edited_time", "bucket")
-            .join(subjects.select("subj"), "subj", "left_anti")
-        )
-        new_meta = kept_meta.unionByName(
-            new_meta.select("subj", "last_edited_time", "bucket")
-        )
-    new_meta = new_meta.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        new_meta.write.mode("overwrite").partitionBy("bucket").parquet(meta_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # advance the watermark of the admitted docs — same bucketed MERGE
+    new_meta = latest.groupBy("subj").agg(
+        F.max_by("last_edited_time", edit_time(F.col("last_edited_time")))
+        .alias("last_edited_time")
+    )
+    merge_bucketed(spark, meta_path, "subj", new_meta, subjects, _META_SCHEMA, has_meta)
 
 
 def incremental_ingest(

@@ -149,16 +149,21 @@ def test_skew_hot_key_orphan_clean_is_equivalent(spark):
 
 
 def test_native_extraction_equals_pandas_extraction(spark):
-    """The JVM-codegen extractor and the Arrow/pandas extractor are two
-    implementations of the same rules — their outputs must be identical
-    including context strings."""
-    from knowledge_nexus_spark.functions.extract import extract_triples, extract_triples_native
-    from knowledge_nexus_spark.operators.graphops import content_docs, freshness_dedup
+    """The fused projection's per-encounter triples and the pure-Python
+    oracle are two implementations of the same extraction rules — their
+    distinct (subj, pred, obj, context) sets must be identical, context
+    strings included (the oracle's unprocessed config keeps every
+    relation, so nothing is orphan-cleaned on either side)."""
+    from knowledge_nexus_spark.operators.graphops import distinct_triples, freshness_dedup
+    from knowledge_nexus_spark.pipeline import fused_docs_projection, projection_graph
 
-    docs = content_docs(freshness_dedup(_spark_docs(spark)))
-    py = set(map(tuple, extract_triples(docs).collect()))
-    nat = set(map(tuple, extract_triples_native(docs).collect()))
-    assert py == nat
+    cfg = PipelineConfig(render_content=False)
+    combined = fused_docs_projection(freshness_dedup(_spark_docs(spark)), cfg)
+    got = set(map(tuple, distinct_triples(projection_graph(combined, cfg)[1]).collect()))
+    want = run_oracle(
+        generate_documents_local(CFG), OracleConfig(create_unprocessed=True)
+    ).edge_set
+    assert got == want, f"missing={list(want - got)[:5]} extra={list(got - want)[:5]}"
 
 
 def test_archived_docs_contribute_no_triples(spark):

@@ -6,10 +6,45 @@ import pytest
 from pyspark.sql import functions as F
 
 from knowledge_nexus_spark.datagen import CorpusConfig, generate_documents
+from knowledge_nexus_spark.functions.ids import normalize_uuid
 from knowledge_nexus_spark.multimodal import decode_features, frame_sample, media_assets
+from knowledge_nexus_spark.pipeline import PipelineConfig, fused_docs_projection, projection_graph
 from knowledge_nexus_spark.streaming.ingest import incremental_ingest
 
 CFG = CorpusConfig(n_docs=80, seed=21)
+
+
+def _fused_triples(docs):
+    """The per-encounter triples of the pipeline's fused projection."""
+    cfg = PipelineConfig(render_content=False)
+    return projection_graph(fused_docs_projection(docs, cfg), cfg)[1]
+
+
+def _extracted(batch):
+    return {
+        (r.subj, r.pred, r.obj, r.context)
+        for r in _fused_triples(batch)
+        .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
+        .collect()
+    }
+
+
+def _snapshot(spark, edges_path, subj=None):
+    edges = spark.read.parquet(edges_path)
+    if subj is not None:
+        edges = edges.filter(F.col("subj") == subj)
+    return {tuple(r) for r in edges.select("subj", "pred", "obj", "context").collect()}
+
+
+def _linked_doc(docs):
+    """(subj, the single stored version) of a live doc that emits triples."""
+    subj = _fused_triples(docs).select("subj").first().subj
+    one = (
+        docs.filter(normalize_uuid(F.col("doc_id")) == subj)
+        .localCheckpoint(eager=True)
+    )
+    assert one.count() == 1
+    return subj, one
 
 
 def test_media_pipeline(spark):
@@ -96,9 +131,8 @@ def test_streaming_merge_is_partition_scoped(spark, tmp_path):
     the accumulated snapshot."""
     import glob
 
-    from knowledge_nexus_spark.functions.extract import extract_triples_native
-    from knowledge_nexus_spark.operators.graphops import content_docs
-    from knowledge_nexus_spark.streaming.ingest import N_BUCKETS, merge_edges_batch
+    from knowledge_nexus_spark.storage.merge import N_BUCKETS
+    from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
 
     docs = generate_documents(spark, CFG)
     edges_path = str(tmp_path / "edges")
@@ -118,7 +152,7 @@ def test_streaming_merge_is_partition_scoped(spark, tmp_path):
         docs.filter(~F.col("archived") & ~F.col("in_trash"))
         .orderBy("doc_id").limit(1).localCheckpoint(eager=True)
     )
-    tris = extract_triples_native(content_docs(one))
+    tris = _fused_triples(one)
     touched = {
         r.b
         for r in tris.select(
@@ -148,45 +182,15 @@ def test_streaming_merge_is_last_writer_wins(spark, tmp_path):
     micro-batch must collapse to the newest before extraction. An
     append-only MERGE-distinct passes the partition-scoped test but fails
     all three."""
-    from knowledge_nexus_spark.functions.extract import (
-        extract_triples_native,
-        normalize_uuid_col,
-    )
-    from knowledge_nexus_spark.operators.graphops import content_docs
     from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
 
     docs = generate_documents(spark, CFG)
     edges_path = str(tmp_path / "edges")
 
-    def snapshot_for(subj):
-        return {
-            (r.subj, r.pred, r.obj, r.context)
-            for r in spark.read.parquet(edges_path)
-            .filter(F.col("subj") == subj)
-            .select("subj", "pred", "obj", "context")
-            .collect()
-        }
-
-    def extracted(batch):
-        return {
-            (r.subj, r.pred, r.obj, r.context)
-            for r in extract_triples_native(content_docs(batch))
-            .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-            .select("subj", "pred", "obj", "context")
-            .collect()
-        }
-
-    # pick a live doc that actually emits link triples
-    some_subj = (
-        extract_triples_native(content_docs(docs)).select("subj").first().subj
-    )
-    one = docs.withColumn(
-        "_subj", normalize_uuid_col(F.col("doc_id"))
-    ).filter(F.col("_subj") == some_subj).drop("_subj").localCheckpoint(eager=True)
-    assert one.count() == 1
+    some_subj, one = _linked_doc(docs)
 
     merge_edges_batch(docs, 0, edges_path)
-    assert snapshot_for(some_subj) == extracted(one)
+    assert _snapshot(spark, edges_path, some_subj) == _extracted(one)
 
     # v2 drops every link span: the removed triples must leave the snapshot
     v2 = (
@@ -195,9 +199,9 @@ def test_streaming_merge_is_last_writer_wins(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     merge_edges_batch(v2, 1, edges_path)
-    want_v2 = extracted(v2)
-    assert snapshot_for(some_subj) == want_v2
-    assert extracted(one) != want_v2, "v2 must actually remove triples"
+    want_v2 = _extracted(v2)
+    assert _snapshot(spark, edges_path, some_subj) == want_v2
+    assert _extracted(one) != want_v2, "v2 must actually remove triples"
 
     # v1 + v3 in ONE batch: freshness dedup keeps only the newest version
     v3 = (
@@ -206,23 +210,24 @@ def test_streaming_merge_is_last_writer_wins(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     merge_edges_batch(one.unionByName(v3), 2, edges_path)
-    assert snapshot_for(some_subj) == extracted(v3)
+    assert _snapshot(spark, edges_path, some_subj) == _extracted(v3)
 
     # archived v4: the document's edges disappear entirely
     v4 = v3.withColumn(
         "last_edited_time", F.lit("2032-01-01T00:00:00.000001Z")
     ).withColumn("archived", F.lit(True))
     merge_edges_batch(v4, 3, edges_path)
-    assert snapshot_for(some_subj) == set()
+    assert _snapshot(spark, edges_path, some_subj) == set()
     # …and the rest of the snapshot is untouched
     assert spark.read.parquet(edges_path).count() > 0
 
 
 def test_incremental_ingest_matches_batch(spark, tmp_path):
     """Two document drops streamed in → edges snapshot equals one batch
-    extraction over the union (idempotent MERGE semantics)."""
-    from knowledge_nexus_spark.functions.extract import extract_triples_native
-    from knowledge_nexus_spark.operators.graphops import content_docs
+    extraction over the union (idempotent MERGE semantics): the oracle's
+    distinct (subj, pred, obj, context) set before orphan cleaning."""
+    from knowledge_nexus_spark.datagen import generate_documents_local
+    from knowledge_nexus_spark.oracle import OracleConfig, run_oracle
 
     docs = generate_documents(spark, CFG)
     half1 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 0)
@@ -244,13 +249,9 @@ def test_incremental_ingest_matches_batch(spark, tmp_path):
         .select("subj", "pred", "obj", "context")
         .collect()
     }
-    want = {
-        tuple(r)
-        for r in extract_triples_native(content_docs(docs))
-        .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-        .dropDuplicates(["subj", "pred", "obj", "context"])
-        .collect()
-    }
+    want = run_oracle(
+        generate_documents_local(CFG), OracleConfig(create_unprocessed=True)
+    ).edge_set
     assert got == want
     # re-run with nothing new: idempotent
     incremental_ingest(spark, in_dir, edges_path, ck)
@@ -525,43 +526,12 @@ def test_streaming_merge_rejects_out_of_order_older_version(spark, tmp_path):
     strictly-newer CDC guard carried across micro-batches; code-review
     finding, round 4). A same-version replay (retry) must be a byte-level
     no-op."""
-    from knowledge_nexus_spark.functions.extract import (
-        extract_triples_native,
-        normalize_uuid_col,
-    )
-    from knowledge_nexus_spark.operators.graphops import content_docs
     from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
 
     docs = generate_documents(spark, CFG)
     edges_path = str(tmp_path / "edges")
 
-    def snapshot_for(subj):
-        return {
-            (r.subj, r.pred, r.obj, r.context)
-            for r in spark.read.parquet(edges_path)
-            .filter(F.col("subj") == subj)
-            .select("subj", "pred", "obj", "context")
-            .collect()
-        }
-
-    def extracted(batch):
-        return {
-            (r.subj, r.pred, r.obj, r.context)
-            for r in extract_triples_native(content_docs(batch))
-            .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-            .select("subj", "pred", "obj", "context")
-            .collect()
-        }
-
-    some_subj = (
-        extract_triples_native(content_docs(docs)).select("subj").first().subj
-    )
-    v1 = (
-        docs.withColumn("_subj", normalize_uuid_col(F.col("doc_id")))
-        .filter(F.col("_subj") == some_subj)
-        .drop("_subj")
-        .localCheckpoint(eager=True)
-    )
+    some_subj, v1 = _linked_doc(docs)
     merge_edges_batch(docs, 0, edges_path)
 
     # v2 rewrites the doc (newer ts, fewer spans) — applied
@@ -571,26 +541,49 @@ def test_streaming_merge_rejects_out_of_order_older_version(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     merge_edges_batch(v2, 1, edges_path)
-    want_v2 = extracted(v2)
-    assert snapshot_for(some_subj) == want_v2
-    assert extracted(v1) != want_v2
+    want_v2 = _extracted(v2)
+    assert _snapshot(spark, edges_path, some_subj) == want_v2
+    assert _extracted(v1) != want_v2
 
     # late re-delivery of the ORIGINAL v1 (older ts) — must be rejected
     merge_edges_batch(v1, 2, edges_path)
-    assert snapshot_for(some_subj) == want_v2, "older version regressed the snapshot"
+    assert _snapshot(spark, edges_path, some_subj) == want_v2, "older version regressed"
 
     # retry of v2 (equal ts) — idempotent, snapshot unchanged
-    before = {
-        (r.subj, r.pred, r.obj, r.context)
-        for r in spark.read.parquet(edges_path)
-        .select("subj", "pred", "obj", "context")
-        .collect()
-    }
+    before = _snapshot(spark, edges_path)
     merge_edges_batch(v2, 3, edges_path)
-    after = {
-        (r.subj, r.pred, r.obj, r.context)
-        for r in spark.read.parquet(edges_path)
-        .select("subj", "pred", "obj", "context")
-        .collect()
-    }
-    assert after == before
+    assert _snapshot(spark, edges_path) == before
+
+
+def test_streaming_admission_compares_instants_across_utc_offsets(spark, tmp_path):
+    """Admission orders versions by parsed instant, like freshness_dedup
+    and refresh: a late re-edit stamped 10:00+0200 (08:00Z) is OLDER than
+    the stored 09:00Z version and must be rejected, although its raw
+    string sorts after it; a later instant in the same offset form is
+    applied."""
+    from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
+
+    docs = generate_documents(spark, CFG)
+    edges_path = str(tmp_path / "edges")
+    subj, one = _linked_doc(docs)
+    merge_edges_batch(docs, 0, edges_path)
+
+    stored = one.withColumn(
+        "last_edited_time", F.lit("2030-06-01T09:00:00.000000Z")
+    ).localCheckpoint(eager=True)
+    merge_edges_batch(stored, 1, edges_path)
+    want = _extracted(stored)
+    assert want and _snapshot(spark, edges_path, subj) == want
+
+    # the late version carries no spans at all: applying it would wipe
+    late = (
+        stored.withColumn("last_edited_time", F.lit("2030-06-01T10:00:00.000000+0200"))
+        .withColumn("spans", F.filter("spans", lambda s: F.lit(False)))
+        .localCheckpoint(eager=True)
+    )
+    merge_edges_batch(late, 2, edges_path)
+    assert _snapshot(spark, edges_path, subj) == want, "older instant was applied"
+
+    newer = late.withColumn("last_edited_time", F.lit("2030-06-01T12:00:00.000000+0200"))
+    merge_edges_batch(newer, 3, edges_path)
+    assert _snapshot(spark, edges_path, subj) == set()

@@ -66,11 +66,13 @@ def test_q1_partial_aggregation(spark):
 
 
 def test_native_extraction_has_no_python(spark):
+    """The fused projection — render + extraction, the library's only
+    triple extraction — runs without a Python worker."""
     from knowledge_nexus_spark.datagen import CorpusConfig, generate_documents
-    from knowledge_nexus_spark.functions.extract import extract_triples_native
+    from knowledge_nexus_spark.pipeline import PipelineConfig, fused_docs_projection
 
     docs = generate_documents(spark, CorpusConfig(n_docs=10)).localCheckpoint(eager=True)
-    plan = _plan(extract_triples_native(docs))
+    plan = _plan(fused_docs_projection(docs, PipelineConfig()))
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert marker not in plan, f"Python stage {marker} in the native extract plan"
 

@@ -88,20 +88,29 @@ def test_indent_and_order_preserved():
     assert out == "# A\n\nfirst\n\n    nested\n\nlast\n\n"
 
 
-def test_native_render_equals_python_render(spark):
-    """The JVM aggregate-fold renderer and the pandas renderer are two
-    implementations of the same templates — byte-identical output."""
+def _native_render(df):
+    """render_spans_native over the parsed-runs spans, one string per row."""
     from pyspark.sql import functions as F
 
+    from knowledge_nexus_spark.functions.render import render_spans_native, spans_with_runs
+
+    return [
+        r.c
+        for r in df.select(spans_with_runs(F.col("spans")).alias("spans"))
+        .select(render_spans_native(F.col("spans")).alias("c"))
+        .collect()
+    ]
+
+
+def test_native_render_equals_python_render(spark):
+    """The JVM native renderer and the plain-Python renderer are two
+    implementations of the same templates — byte-identical output."""
     from knowledge_nexus_spark.datagen import CorpusConfig, generate_documents
-    from knowledge_nexus_spark.functions.render import render_spans, render_spans_native
 
     docs = generate_documents(spark, CorpusConfig(n_docs=150, seed=23)).localCheckpoint(True)
-    py = {r.doc_id: r.c for r in docs.select(
-        "doc_id", render_spans(F.col("spans")).alias("c")).collect()}
-    nat = {r.doc_id: r.c for r in docs.select(
-        "doc_id", render_spans_native(F.col("spans")).alias("c")).collect()}
-    assert py == nat
+    ordered = docs.orderBy("doc_id", "last_edited_time")
+    want = [render_spans_py([s.asDict() for s in r.spans]) for r in ordered.collect()]
+    assert _native_render(ordered) == want
 
 
 def test_date_passthrough_on_bad_value():
@@ -144,17 +153,16 @@ def test_rich_runs_annotation_fold_goldens():
 
 
 def test_rich_runs_native_fold_matches_python(spark):
-    """The from_json native fold and the pandas fold are byte-identical,
-    including inside the full-document render of both variants."""
+    """The native fold over from_json-parsed runs and the Python fold are
+    byte-identical, including inside the full-document render."""
     import json
 
     from pyspark.sql import functions as F
 
     from knowledge_nexus_spark.functions.render import (
-        fold_runs_expr,
+        RUNS_DDL,
+        fold_runs_arr_expr,
         fold_runs_py,
-        render_spans,
-        render_spans_native,
     )
 
     cases = [
@@ -168,7 +176,12 @@ def test_rich_runs_native_fold_matches_python(spark):
     ]
     rows = [(json.dumps(c, sort_keys=True),) for c in cases]
     df = spark.createDataFrame(rows, ["runs_json"])
-    native = [r.f for r in df.select(fold_runs_expr(F.col("runs_json")).alias("f")).collect()]
+    native = [
+        r.f
+        for r in df.select(
+            fold_runs_arr_expr(F.from_json(F.col("runs_json"), RUNS_DDL)).alias("f")
+        ).collect()
+    ]
     py = [fold_runs_py(c) for c in cases]
     assert native == py
 
@@ -180,6 +193,4 @@ def test_rich_runs_native_fold_matches_python(spark):
         [(s,) for s in spans_rows],
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    a = [r.c for r in sdf.select(render_spans(F.col("spans")).alias("c")).collect()]
-    b = [r.c for r in sdf.select(render_spans_native(F.col("spans")).alias("c")).collect()]
-    assert a == b
+    assert _native_render(sdf) == [render_spans_py(spans) for spans in spans_rows]
