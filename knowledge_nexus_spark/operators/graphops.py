@@ -30,7 +30,10 @@ def edit_time(col: Column) -> Column:
     return F.to_timestamp(col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
 
 
-def _freshness_window(documents: DataFrame) -> DataFrame:
+def freshness_dedup(documents: DataFrame) -> DataFrame:
+    """Keep the newest version per doc_id (strictly-newer-wins,
+    notion_provider.py:315-319): one window over doc_id, a single shuffle
+    of the wide rows."""
     # Final tie-break on a content hash: two versions with IDENTICAL
     # last_edited_time but different spans/title must pick a deterministic
     # winner across runs/partitionings (which one wins is implementation-
@@ -66,33 +69,6 @@ def _freshness_window(documents: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_nver", "_pts")
     )
-
-
-def freshness_dedup(documents: DataFrame, few_dups: bool = False) -> DataFrame:
-    """Keep the newest version per doc_id (strictly-newer-wins,
-    notion_provider.py:315-319). Deterministic tie-break on the raw string.
-
-    Default: one window over doc_id — a single shuffle of the wide rows.
-
-    ``few_dups=True`` trades that wide shuffle for extra SCANS: a narrow
-    groupBy finds the duplicated doc_ids (small when re-edits are rare),
-    the set is broadcast, the un-duplicated majority passes through with
-    no shuffle, and only the duplicated sliver is window-deduped. Measured
-    tradeoff: in local mode / fast storage the single-shuffle window wins
-    (scans dominate); on a cluster reading object storage where shuffle
-    disks/network are the bottleneck, the broadcast path avoids moving the
-    span payloads entirely and wins at wide-row corpora."""
-    if not few_dups:
-        return _freshness_window(documents)
-    dup_ids = (
-        documents.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select("doc_id")
-    )
-    singles = documents.join(F.broadcast(dup_ids), "doc_id", "left_anti")
-    dups = documents.join(F.broadcast(dup_ids), "doc_id", "left_semi")
-    return singles.unionByName(_freshness_window(dups))
 
 
 def cap_group_size(
@@ -163,73 +139,24 @@ def content_docs(documents: DataFrame) -> DataFrame:
     return documents.filter(~F.col("archived") & ~F.col("in_trash"))
 
 
-def clean_orphans(
-    triples: DataFrame, nodes: DataFrame, hot_key_min_count: int | None = None
-) -> DataFrame:
+def clean_orphans(triples: DataFrame, nodes: DataFrame) -> DataFrame:
     """Keep triples whose BOTH endpoints exist in nodes (left-semi ×2).
 
-    ``hot_key_min_count`` enables EXPLICIT hub-skew handling: a hub entity
-    (the reference's root page — every child emits CONTAINS to it,
-    notion_provider.py:144-150) can own a large fraction of all obj keys,
-    so the obj semi-join's shuffle sends that fraction to ONE reducer — a
-    data-proportional straggler no executor count fixes (and AQE's skew
-    rule does not fire on these LeftSemi joins). Heavy-hitter separation
-    removes it: a NARROW pre-aggregation (map-side combine collapses the
-    hub to one row per mapper) finds keys above the threshold, the tiny
-    hot set is collected and checked as a LITERAL predicate (no shuffle at
-    all for hub rows), and only the un-skewed remainder goes through the
-    shuffle semi-join."""
+    A hub entity (the reference's root page — every child emits CONTAINS
+    to it, notion_provider.py:144-150) owns a large share of the obj keys,
+    yet no explicit heavy-hitter split is planned here. Counter-measurement
+    (4-core host, 4 alternated runs per arm): routing keys with ≥ 100,000
+    triples through a broadcast branch made ``count()`` over 4M triples
+    with a 1M-triple hub object against 200k nodes slower, median 3.8 s
+    split vs 1.6 s plain at session defaults and 6.6 vs 4.0 s with
+    automatic broadcasts off; on a 2,000-doc corpus, where no key reaches
+    the threshold, the split's group-by and broadcast subtrees took
+    build_graph from 10 to 21 Spark jobs."""
     ids = nodes.select(F.col("id"))
-    if not hot_key_min_count:
-        return (
-            triples.join(ids, triples["subj"] == ids["id"], "left_semi")
-            .join(ids, triples["obj"] == ids["id"], "left_semi")
-        )
-
-    # LAZY hub handling — no driver round trip. The earlier form collected
-    # the hot set eagerly and injected it as an isin() literal; that bought
-    # shuffle-freedom for hub rows at the cost of 2 synchronous collects +
-    # 4 driver-serialized stages on the critical path BEFORE any sink could
-    # start (profiled: ~11 s of 4N-invariant wall at 1.2M docs — the
-    # dominant term of the measured N→4N non-scaling overhead). Broadcast
-    # semi/anti joins give the identical split with zero driver sync: hub
-    # rows stream past a broadcast hash set (no shuffle, no skewed reducer
-    # — AQE's skew rule still cannot fire on LeftSemi), and the whole
-    # subtree is lazy, so the edges job overlaps the nodes sink.
-    #
-    # The 10k cap (broadcast-size bound) must be DETERMINISTIC here: the
-    # hot subtree is referenced by two branches, and a bare limit() could
-    # legitimately pick two different subsets when the branches execute —
-    # rows of a key hot in one branch but not the other would be dropped.
-    # TakeOrderedAndProject on (count desc, obj) pins one subset; the sort
-    # input is already ≤ (total_rows / hot_key_min_count) keys, so it is
-    # tiny by construction.
-    hot = (
-        triples.groupBy("obj")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= hot_key_min_count)
-        .orderBy(F.desc("_n"), "obj")
-        .limit(10_000)
-        .select("obj")
+    return (
+        triples.join(ids, triples["subj"] == ids["id"], "left_semi")
+        .join(ids, triples["obj"] == ids["id"], "left_semi")
     )
-    # validity of a hub key (does it exist in nodes?) rides inside the
-    # broadcast subtree instead of a second collect
-    hot_valid_f = hot.join(ids, hot["obj"] == ids["id"], "left_semi")
-
-    # split BEFORE joining: hub rows pass the obj check against the
-    # broadcast hash set (shuffle-free) and only need the (un-skewed) subj
-    # semi-join; the rest flows through both shuffle semi-joins with
-    # uniform key distribution
-    hot_branch = (
-        triples.join(F.broadcast(hot_valid_f), "obj", "left_semi")
-        .join(ids, F.col("subj") == ids["id"], "left_semi")
-    )
-    rest = (
-        triples.join(F.broadcast(hot), "obj", "left_anti")
-        .join(ids, F.col("subj") == ids["id"], "left_semi")
-        .join(ids, F.col("obj") == ids["id"], "left_semi")
-    )
-    return hot_branch.unionByName(rest)
 
 
 def add_missing_nodes(triples: DataFrame, nodes: DataFrame) -> DataFrame:

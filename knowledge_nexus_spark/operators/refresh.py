@@ -22,6 +22,8 @@ docs), never O(corpus):
   chunks/   (page_id, sequence, content, embedding) — only when
             cfg.with_chunks; the reference re-chunks exactly the changed
             pages (content_chunker_and_embedder.py:151-175)  key: page_id
+            A refresh without chunks deletes the table (its rows would go
+            stale); the next refresh with chunks rebuilds it from nodes/.
 
 Each refresh: freshness-dedup the incoming snapshot → diff against meta →
 re-extract (and re-chunk) changed docs only (same fused single-pass
@@ -58,7 +60,12 @@ from knowledge_nexus_spark.operators.graphops import (
 )
 from knowledge_nexus_spark.pipeline import PipelineConfig
 from knowledge_nexus_spark.schema import CHUNKS_SCHEMA, TRIPLES_SCHEMA
-from knowledge_nexus_spark.storage.merge import merge_bucketed, read_bucketed, snapshot_exists
+from knowledge_nexus_spark.storage.merge import (
+    delete_snapshot,
+    merge_bucketed,
+    read_bucketed,
+    snapshot_exists,
+)
 
 # Declared schemas for every state table (Iceberg tables carry explicit
 # schemas; parquet footer inference is the sandbox-emulation artifact and
@@ -172,6 +179,30 @@ def refresh_updated(
     combined, meta, nodes, triples, burls = _extract_changed(changed, cfg)
     n_changed = meta.count()
 
+    def merge(table: str, key_col: str, rows: DataFrame, keys: DataFrame | None) -> None:
+        # keys=None writes ``rows`` as the whole table
+        merge_bucketed(
+            spark, f"{state_dir}/{table}", key_col, rows, keys,
+            _state_schemas()[table], has_state and keys is not None,
+        )
+
+    def chunks_of(pages: DataFrame) -> DataFrame:
+        from knowledge_nexus_spark.operators.chunking import chunk_and_embed
+
+        return chunk_and_embed(
+            pages, cfg.chunk_size, cfg.chunk_overlap, cfg.embedding_dim
+        )
+
+    # chunks/ is either current or absent: a refresh without chunks leaves
+    # the changed pages' old chunks behind, so it drops the table, and a
+    # refresh with chunks over a state that has none chunks every stored
+    # page once (the merge below then replaces the changed pages' rows)
+    if not cfg.with_chunks:
+        delete_snapshot(spark, f"{state_dir}/chunks")
+    elif has_state and not snapshot_exists(spark, f"{state_dir}/chunks"):
+        stored_nodes = _read_state(spark, state_dir, "nodes").drop("bucket")
+        merge("chunks", "page_id", chunks_of(stored_nodes), None)
+
     def _result() -> RefreshResult:
         return RefreshResult(
             nodes=_derive_nodes(spark, state_dir),
@@ -186,13 +217,6 @@ def refresh_updated(
         return _result()
 
     changed_ids = meta.select("doc_id")  # lineage is cut at `combined`
-
-    def merge(table: str, key_col: str, rows: DataFrame, keys: DataFrame) -> None:
-        merge_bucketed(
-            spark, f"{state_dir}/{table}", key_col, rows, keys,
-            _state_schemas()[table], has_state,
-        )
-
     merge("meta", "doc_id", meta, changed_ids)
     merge("nodes", "id", nodes, changed_ids.select(F.col("doc_id").alias("id")))
     merge("burls", "doc_id", burls, changed_ids)
@@ -201,13 +225,8 @@ def refresh_updated(
         changed_ids.select(normalize_uuid(F.col("doc_id")).alias("subj")),
     )
     if cfg.with_chunks:
-        from knowledge_nexus_spark.operators.chunking import chunk_and_embed
-
-        new_chunks = chunk_and_embed(
-            nodes, cfg.chunk_size, cfg.chunk_overlap, cfg.embedding_dim
-        )
         merge(
-            "chunks", "page_id", new_chunks,
+            "chunks", "page_id", chunks_of(nodes),
             changed_ids.select(F.col("doc_id").alias("page_id")),
         )
 
@@ -230,7 +249,7 @@ def _derive_edges(spark: SparkSession, state_dir: str, cfg: PipelineConfig) -> D
     if cfg.create_unprocessed:
         kept = triples
     else:
-        kept = clean_orphans(triples, nodes, cfg.skew_hot_min_count)
+        kept = clean_orphans(triples, nodes)
     return distinct_triples(kept)
 
 

@@ -60,19 +60,6 @@ class PipelineConfig:
     canonicalize: bool = False  # stage 5 (G3 alias connected components)
     link_min_cosine: float = 0.6
     alias_min_cosine: float = 0.95  # entity-entity merge confidence
-    # explicit hub-skew handling in orphan cleaning: endpoint keys with at
-    # least this many triples are checked as literal predicates instead of
-    # shuffled to one reducer (None disables; see graphops.clean_orphans)
-    skew_hot_min_count: int | None = 100_000
-    # cache the fused intermediate (True) vs recompute per sink branch
-    # (False). WARNING: False is pathological in build_graph — the fused
-    # projection has 4+ consumers (nodes, bookmarks, hot-key pre-agg, semi
-    # joins) and each would re-run render+extract; run_pipeline's s2 and s3
-    # snapshots each re-run it too (see run_pipeline's measurement).
-    persist_intermediate: bool = True
-    # freshness dedup via broadcast few-dups joins instead of the wide
-    # window shuffle (see graphops.freshness_dedup tradeoff notes)
-    dedup_few_dups: bool = False
 
 
 _HEADER_COLS = [
@@ -159,8 +146,9 @@ def projection_graph(combined: DataFrame, cfg: PipelineConfig) -> tuple[DataFram
 class GraphResult:
     nodes: DataFrame
     edges: DataFrame
-    triples_raw: DataFrame  # pre-dedup per-encounter appends
-    documents: DataFrame | None = None  # freshness-deduped (persisted) input
+    triples_raw: DataFrame  # pre-dedup per-encounter appends (persisted)
+    documents: DataFrame  # the fused projection of the deduped input (persisted)
+    deduped: DataFrame | None = None  # persisted only for the media branch
 
     def unpersist(self) -> None:
         # blocking: the async default leaves the old run's blocks occupying
@@ -168,16 +156,15 @@ class GraphResult:
         # blocks then land in the DISK store and every subsequent read pays
         # full deserialization (profiled: identical 1.2 GB cached reads cost
         # 6-13x the CPU on a back-to-back second run in one JVM)
-        self.triples_raw.unpersist(blocking=True)
-        if self.documents is not None:
-            self.documents.unpersist(blocking=True)
+        for df in (self.triples_raw, self.documents, self.deduped):
+            if df is not None:
+                df.unpersist(blocking=True)
 
 
 def build_graph(
     spark: SparkSession,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    persist_triples: bool = True,
 ) -> GraphResult:
     """documents(spans) → (nodes, edges).
 
@@ -186,23 +173,21 @@ def build_graph(
     column is scanned once, shuffled once, and DROPPED; the persisted
     intermediate holds only (header cols, content, triple array).
 
-    ``persist_triples`` caches the raw triples: the orphan policy's hot-key
-    pre-aggregation and semi-joins both consume them."""
+    The raw triples are persisted too: add_missing_nodes reads them
+    twice (once per endpoint side), and callers read ``triples_raw``
+    after the edges. ``GraphResult.unpersist`` releases every frame
+    persisted here."""
     cfg = cfg or PipelineConfig()
 
-    deduped = freshness_dedup(documents, few_dups=cfg.dedup_few_dups)
-    if cfg.with_media and cfg.persist_intermediate:
+    deduped = freshness_dedup(documents)
+    if cfg.with_media:
         # the media branch re-scans the wide spans column; persisting
         # the deduped frame keeps the dedup window (the plan's widest
         # shuffle) from running twice. MEMORY_AND_DISK — spans spill.
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-    combined = fused_docs_projection(deduped, cfg)
-    if cfg.persist_intermediate:
-        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    combined = fused_docs_projection(deduped, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     all_nodes, triples_raw = projection_graph(combined, cfg)
-
-    if persist_triples and cfg.persist_intermediate:
-        triples_raw = triples_raw.persist(StorageLevel.MEMORY_AND_DISK)
+    triples_raw = triples_raw.persist(StorageLevel.MEMORY_AND_DISK)
 
     media_edges = None
     media_nodes = None
@@ -215,7 +200,7 @@ def build_graph(
         all_nodes = add_missing_nodes(triples_raw, all_nodes)
         kept = triples_raw
     else:
-        kept = clean_orphans(triples_raw, all_nodes, cfg.skew_hot_min_count)
+        kept = clean_orphans(triples_raw, all_nodes)
 
     if media_nodes is not None:
         # unioned AFTER orphan cleaning: media refs are never triple
@@ -232,7 +217,8 @@ def build_graph(
             media_edges.withColumn("context", F.coalesce(F.col("context"), F.lit("")))
         )
     return GraphResult(
-        nodes=all_nodes, edges=edges, triples_raw=triples_raw, documents=combined
+        nodes=all_nodes, edges=edges, triples_raw=triples_raw, documents=combined,
+        deduped=deduped if cfg.with_media else None,
     )
 
 
@@ -261,13 +247,9 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     ck = StageCheckpointer(spark, workdir)
 
-    docs = ck.load_or_compute(
-        "s1_documents", lambda: freshness_dedup(documents, few_dups=cfg.dedup_few_dups)
-    )
+    docs = ck.load_or_compute("s1_documents", lambda: freshness_dedup(documents))
 
-    combined = fused_docs_projection(docs, cfg)
-    if cfg.persist_intermediate:
-        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    combined = fused_docs_projection(docs, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     graph_nodes, graph_triples = projection_graph(combined, cfg)
     triples_raw = ck.load_or_compute("s2_triples_raw", lambda: graph_triples)
     nodes = ck.load_or_compute("s3_nodes", lambda: graph_nodes)

@@ -2,7 +2,10 @@
 
 Local-mode testing defaults; every knob is the one you would also set on a
 multi-executor cluster (AQE, Arrow batch size bounded because span arrays
-and embeddings make wide rows — see SURVEY.md §4.2).
+and embeddings make wide rows — see SURVEY.md §4.2). Three deployment
+settings come from the environment (``SPARK_GRAFT_CPUS``,
+``SPARK_GRAFT_LOCAL_DIR``, ``SPARK_DRIVER_MEMORY``); any other conf is
+overridden through ``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -22,11 +25,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
-    scale this is sized to ~2-3× total executor cores instead.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    cores this process may run on). ``shuffle_partitions`` defaults to the
+    local core count — at cluster scale this is sized to ~2-3× total
+    executor cores instead. ``extra_conf`` entries override every default
+    set here.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -52,28 +57,20 @@ def get_spark(
         # rendered-span folds) — at byte-dense-but-row-cheap 16m targets a
         # 30 MB shuffle coalesces to 2 tasks and serializes a 32-core box.
         # 4m/1m keeps ~8-32 tasks alive on the bench corpora while still
-        # merging the pathological many-tiny-partition case. Env-tunable:
-        # on a cluster whose stages ARE byte-bound, raise toward 64-256m
-        # (guide §2.2) — the right value tracks compute-per-byte, not
-        # cluster size.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "4m"),
-        )
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION", "1m"),
-        )
+        # merging the pathological many-tiny-partition case. On a cluster
+        # whose stages ARE byte-bound, raise both through extra_conf toward
+        # 64-256m (guide §2.2) — the right value tracks compute-per-byte,
+        # not cluster size.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         # the bench corpora are single-file tables whose row-group count,
         # not this setting, bounds scan parallelism (see partitioning.py);
         # 16m still splits the multi-row-group fact tables (lineitem: 6
         # row groups in one 132 MB file) across cores instead of 2 tasks.
-        # At production scale with healthy 128 MB-1 GB files raise this to
-        # 512m-1g for fewer, larger map tasks (guide §6.1).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # At production scale with healthy 128 MB-1 GB files raise this
+        # through extra_conf to 512m-1g for fewer, larger map tasks
+        # (guide §6.1).
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # span arrays + embeddings are wide rows: bound Arrow batches
@@ -99,8 +96,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_WARM_PYTHON", "1") != "0":
-        _warm_python_workers(spark)
+    _warm_python_workers(spark)
     return spark
 
 

@@ -38,6 +38,14 @@ def snapshot_exists(spark: SparkSession, path: str) -> bool:
     return glob is not None and len(glob) > 0
 
 
+def delete_snapshot(spark: SparkSession, path: str) -> None:
+    """Remove a table's (or one partition's) whole directory; a no-op when
+    it does not exist."""
+    jroot, fs = _fs_path(spark, path)
+    if fs.exists(jroot):
+        fs.delete(jroot, True)
+
+
 def read_bucketed(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Read a bucketed table with its DECLARED schema — never footer
     inference — so an empty table (zero part files) reads as an empty
@@ -53,9 +61,7 @@ def _delete_partition_dirs(spark: SparkSession, root: str, buckets: list[int]) -
     only rewrites partitions PRESENT in the output, so a fully-deleted
     bucket would otherwise keep its stale files)."""
     for b in buckets:
-        p, fs = _fs_path(spark, f"{root}/bucket={b}")
-        if fs.exists(p):
-            fs.delete(p, True)
+        delete_snapshot(spark, f"{root}/bucket={b}")
 
 
 def merge_bucketed(
@@ -63,7 +69,7 @@ def merge_bucketed(
     path: str,
     key_col: str,
     new_rows: DataFrame,
-    changed_keys: DataFrame,
+    changed_keys: DataFrame | None,
     schema: T.StructType,
     has_state: bool,
 ) -> None:
@@ -75,7 +81,8 @@ def merge_bucketed(
     bucket is always touched. Buckets whose content disappears entirely
     are deleted explicitly. Idempotent under retries: a bucket's merged
     content is a pure function of (stored bucket, changed keys, new rows).
-    Without ``has_state`` the new rows are written as the whole table."""
+    Without ``has_state`` the new rows are written as the whole table and
+    ``changed_keys`` is not read."""
     new_rows = new_rows.withColumn("bucket", bucket_of(F.col(key_col)))
     if not has_state:
         new_rows.write.mode("overwrite").partitionBy("bucket").parquet(path)

@@ -134,20 +134,6 @@ def test_non_http_refs_bookmark_parity(spark):
     assert not any(o == "not-a-uuid-target" for (_s, _p, o) in got)
 
 
-def test_skew_hot_key_orphan_clean_is_equivalent(spark):
-    """Hub-skew heavy-hitter separation must not change the result: with a
-    threshold low enough that the hub doc qualifies, the edge set equals
-    the plain double-semi-join path (and the oracle)."""
-    docs = _spark_docs(spark)
-    plain = build_graph(
-        spark, docs, PipelineConfig(render_content=False, skew_hot_min_count=None)
-    )
-    skewed = build_graph(
-        spark, docs, PipelineConfig(render_content=False, skew_hot_min_count=3)
-    )
-    assert _triple_set(plain.edges) == _triple_set(skewed.edges)
-
-
 def test_native_extraction_equals_pandas_extraction(spark):
     """The fused projection's per-encounter triples and the pure-Python
     oracle are two implementations of the same extraction rules — their

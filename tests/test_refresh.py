@@ -167,6 +167,70 @@ def test_refresh_rechunks_only_changed(spark, tmp_path):
     assert chunk_set(r2.chunks) == chunk_set(want)
 
 
+def _reedit(docs, k, offset, ts):
+    """k non-archived docs (after skipping ``offset``) re-edited at ``ts``."""
+    ids = [
+        r.doc_id
+        for r in docs.filter(~F.col("archived") & ~F.col("in_trash"))
+        .select("doc_id").distinct().orderBy("doc_id").collect()[offset:offset + k]
+    ]
+    updated = (
+        docs.filter(F.col("doc_id").isin(ids))
+        .dropDuplicates(["doc_id"])
+        .withColumn("last_edited_time", F.lit(ts))
+        .withColumn("title", F.concat(F.col("title"), F.lit(" edited")))
+        .withColumn("spans", F.slice("spans", 1, 2))
+        .localCheckpoint(eager=True)
+    )
+    return docs.unionByName(updated)
+
+
+def test_refresh_keeps_chunks_current_across_chunk_settings(spark, tmp_path):
+    """chunks/ is current or absent whatever the earlier refreshes' chunk
+    setting: a refresh with chunks over a state built without them chunks
+    every page (it used to fail reading a chunks/ that was never written),
+    and chunks of docs re-edited while chunking was off are not served
+    stale by a later refresh with chunks, even one that changes nothing."""
+    from knowledge_nexus_spark.operators.chunking import chunk_and_embed
+
+    with_chunks = PipelineConfig(render_content=True, with_chunks=True)
+    no_chunks = PipelineConfig(render_content=True, with_chunks=False)
+    state = str(tmp_path / "state")
+
+    def chunk_set(df):
+        return {
+            (r.page_id, r.sequence, r.content, tuple(round(x, 6) for x in r.embedding))
+            for r in df.collect()
+        }
+
+    def rebuilt_chunks(docs):
+        full = build_graph(spark, docs, with_chunks)
+        try:
+            return chunk_set(chunk_and_embed(
+                full.nodes, with_chunks.chunk_size, with_chunks.chunk_overlap,
+                with_chunks.embedding_dim,
+            ))
+        finally:
+            full.unpersist()
+
+    docs_v1 = generate_documents(spark, CFG)
+    assert refresh_updated(spark, docs_v1, state, no_chunks).chunks is None
+
+    docs_v2 = _reedit(docs_v1, 2, 0, "2033-01-01T00:00:00.000001Z")
+    r2 = refresh_updated(spark, docs_v2, state, with_chunks)
+    assert r2.n_changed == 2
+    want_v2 = rebuilt_chunks(docs_v2)
+    assert chunk_set(r2.chunks) == want_v2
+
+    docs_v3 = _reedit(docs_v2, 2, 2, "2034-01-01T00:00:00.000001Z")
+    assert refresh_updated(spark, docs_v3, state, no_chunks).n_changed == 2
+    r4 = refresh_updated(spark, docs_v3, state, with_chunks)
+    assert r4.n_changed == 0
+    want_v3 = rebuilt_chunks(docs_v3)
+    assert want_v3 != want_v2  # the v3 edits changed the chunks
+    assert chunk_set(r4.chunks) == want_v3
+
+
 def test_refresh_handles_new_and_archived_docs(spark, tmp_path):
     """A NEW doc appears; an existing doc flips to archived — refresh must
     add the former and remove the latter's node + triples, still equal to

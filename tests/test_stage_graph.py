@@ -97,3 +97,24 @@ def test_projection_columns_keyed_on_spark_context(spark):
     assert _projection_columns(other, True) is not cols
     # a context change rebuilds, and drops the old context's entries
     assert _projection_columns(sc, True) is not cols
+
+
+def test_graph_result_unpersist_releases_every_persisted_frame(spark):
+    """build_graph persists the fused projection, the raw triples and, for
+    the media branch, the deduped documents; ``unpersist`` frees them all.
+    Compared as RDD-id sets: the context cleaner may drop other tests'
+    cached RDDs meanwhile, which only shrinks the set."""
+    jsc = spark.sparkContext._jsc
+
+    def cached_ids():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = cached_ids()
+    res = build_graph(
+        spark, generate_documents(spark, CorpusConfig(n_docs=40, seed=9173)),
+        PipelineConfig(render_content=False, with_media=True),
+    )
+    assert res.edges.count() > 0 and res.nodes.count() > 0
+    assert len(cached_ids() - before) == 3
+    res.unpersist()
+    assert cached_ids() <= before
