@@ -6,7 +6,7 @@ paying for the whole headline suite.
 
 Usage: python bench_extra.py <query> [query ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default 32)
+       SPARK_GRAFT_CPUS   (default: the cores this process may run on)
        SPARK_GRAFT_REPEATS (default 3)
 """
 
@@ -37,10 +37,9 @@ def main() -> None:
         )
         sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
 
-    spark = get_spark("knx-bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark("knx-bench-extra")
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()

@@ -8,16 +8,15 @@ operator a user running daily refreshes hits first: the expensive work
 O(corpus).
 
 State layout under ``state_dir`` (parquet — the sandbox stand-in for
-Iceberg tables; MERGE INTO replaces the partition rewrites in production).
-EVERY state table is hash-partitioned on ``bucket = pmod(xxhash64(key), N)``
-so a refresh reads and rewrites ONLY the buckets its changed keys live in
-(dynamic partition overwrite) — bytes written per refresh are O(changed
-docs), never O(corpus):
+Iceberg tables). EVERY state table is hash-partitioned on its document's
+normalized key (storage.merge.bucket_of), so one touched-bucket list per
+refresh serves every table, and bytes written per refresh are
+O(changed docs), never O(corpus):
 
-  meta/     (doc_id, last_edited_time)              key: doc_id
+  meta/     (doc_id, last_edited_time) — the watermark   key: doc_id
   nodes/    page-node rows (incl. rendered content — the WIDE table whose
             wholesale rewrite was the round-2 scale hole)    key: id
-  triples/  (subj, pred, obj, context)              key: subj (normalized)
+  triples/  (subj, pred, obj, context)              key: subj
   burls/    (doc_id, url)                           key: doc_id
   chunks/   (page_id, sequence, content, embedding) — only when
             cfg.with_chunks; the reference re-chunks exactly the changed
@@ -25,15 +24,17 @@ docs), never O(corpus):
             A refresh without chunks deletes the table (its rows would go
             stale); the next refresh with chunks rebuilds it from nodes/.
 
-Each refresh: freshness-dedup the incoming snapshot → diff against meta →
-re-extract (and re-chunk) changed docs only (same fused single-pass
-projection as build_graph) → per-table keyed delete+insert touching only
-the changed keys' buckets (storage.merge.merge_bucketed, the same MERGE
-the stream sink runs) → derive the output graph (bookmark nodes from
-merged burls, orphan policy, distinct edges). The derived graph equals a
-full rebuild over the new corpus by construction; tests pin that
-equality, the exactly-K re-extraction count, and that only the touched
-bucket partitions are rewritten.
+Each refresh runs the protocol of storage.merge, the one the stream sink
+runs too: freshness-dedup the incoming snapshot → admit the docs newer
+than the stored watermark → re-extract (and re-chunk) them with the fused
+single-pass projection build_graph uses → one aggregate for the touched
+buckets and the changed-doc count → staged bucket writes of nodes, burls,
+triples and chunks → the watermark LAST, so a refresh that fails midway
+re-admits the same docs when it is re-run. The output graph is then
+derived from the state (bookmark nodes from burls, orphan policy,
+distinct edges) and equals a full rebuild over the new corpus; tests pin
+that equality, the exactly-K re-extraction count, and that only the
+touched bucket partitions are rewritten.
 
 Scope: covers the extract/render/merge/chunk stages the reference's
 refresh_updated_pages touches; entity linking / canonicalization are
@@ -45,7 +46,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowledge_nexus_spark.functions.extract import bookmark_nodes
@@ -54,13 +56,15 @@ from knowledge_nexus_spark.operators.graphops import (
     add_missing_nodes,
     clean_orphans,
     distinct_triples,
-    edit_time,
     freshness_dedup,
     page_nodes,
 )
-from knowledge_nexus_spark.pipeline import PipelineConfig
+from knowledge_nexus_spark.pipeline import PipelineConfig, fused_docs_projection
 from knowledge_nexus_spark.schema import CHUNKS_SCHEMA, TRIPLES_SCHEMA
 from knowledge_nexus_spark.storage.merge import (
+    N_BUCKETS,
+    admit_newer,
+    bucket_of,
     delete_snapshot,
     merge_bucketed,
     read_bucketed,
@@ -110,20 +114,9 @@ class RefreshResult:
     chunks: DataFrame | None = None  # only when cfg.with_chunks
 
 
-def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
-    """(meta, nodes, triples+bucket, burls) for the changed docs — the same
-    fused single-pass projection as pipeline.build_graph (one shared
-    helper: spans scanned once, rich_runs parsed once, then dropped)."""
-    from knowledge_nexus_spark.pipeline import fused_docs_projection
-
-    combined = fused_docs_projection(changed, cfg)
-    # localCheckpoint, NOT persist: the changed-detection lineage reads the
-    # meta/ state path which this refresh later OVERWRITES — Spark's cache
-    # manager re-caches (recomputes!) persisted plans whose source path is
-    # written, which would silently re-evaluate `changed` as empty against
-    # the new watermarks. Checkpointing cuts the path dependency.
-    combined = combined.localCheckpoint(eager=True)
-
+def _extract_changed(combined: DataFrame, cfg: PipelineConfig):
+    """(meta, nodes, triples, burls) of the changed docs' fused projection
+    (pipeline.fused_docs_projection, the same as build_graph's)."""
     meta = combined.select("doc_id", "last_edited_time")
     nodes = page_nodes(combined, cfg.add_archived, cfg.add_removed)
 
@@ -138,7 +131,7 @@ def _extract_changed(changed: DataFrame, cfg: PipelineConfig):
         .select("doc_id", F.col("t.obj").alias("url"))
         .dropDuplicates(["doc_id", "url"])
     )
-    return combined, meta, nodes, triples, burls
+    return meta, nodes, triples, burls
 
 
 def refresh_updated(
@@ -157,80 +150,64 @@ def refresh_updated(
     derived (nodes, edges[, chunks]) plus the count of re-extracted docs —
     the per-stage lineage metric the reference logs."""
     cfg = cfg or PipelineConfig()
-
-    latest = freshness_dedup(incoming)
-    has_state = snapshot_exists(spark, f"{state_dir}/meta")
-
-    if has_state:
-        prev = _read_state(spark, state_dir, "meta").select(
-            F.col("doc_id"), F.col("last_edited_time").alias("_stored_ts")
-        )
-        changed = (
-            latest.join(prev, "doc_id", "left")
-            .filter(
-                F.col("_stored_ts").isNull()
-                | (edit_time(F.col("last_edited_time")) > edit_time(F.col("_stored_ts")))
-            )
-            .drop("_stored_ts")
-        )
-    else:
-        changed = latest
-
-    combined, meta, nodes, triples, burls = _extract_changed(changed, cfg)
-    n_changed = meta.count()
-
-    def merge(table: str, key_col: str, rows: DataFrame, keys: DataFrame | None) -> None:
-        # keys=None writes ``rows`` as the whole table
-        merge_bucketed(
-            spark, f"{state_dir}/{table}", key_col, rows, keys,
-            _state_schemas()[table], has_state and keys is not None,
-        )
-
-    def chunks_of(pages: DataFrame) -> DataFrame:
-        from knowledge_nexus_spark.operators.chunking import chunk_and_embed
-
-        return chunk_and_embed(
-            pages, cfg.chunk_size, cfg.chunk_overlap, cfg.embedding_dim
-        )
-
-    # chunks/ is either current or absent: a refresh without chunks leaves
-    # the changed pages' old chunks behind, so it drops the table, and a
-    # refresh with chunks over a state that has none chunks every stored
-    # page once (the merge below then replaces the changed pages' rows)
-    if not cfg.with_chunks:
-        delete_snapshot(spark, f"{state_dir}/chunks")
-    elif has_state and not snapshot_exists(spark, f"{state_dir}/chunks"):
-        stored_nodes = _read_state(spark, state_dir, "nodes").drop("bucket")
-        merge("chunks", "page_id", chunks_of(stored_nodes), None)
-
-    def _result() -> RefreshResult:
-        return RefreshResult(
-            nodes=_derive_nodes(spark, state_dir),
-            edges=_derive_edges(spark, state_dir, cfg),
-            n_changed=n_changed,
-            chunks=_read_state(spark, state_dir, "chunks").drop("bucket")
-            if cfg.with_chunks
-            else None,
-        )
-
-    if has_state and n_changed == 0:
-        return _result()
-
-    changed_ids = meta.select("doc_id")  # lineage is cut at `combined`
-    merge("meta", "doc_id", meta, changed_ids)
-    merge("nodes", "id", nodes, changed_ids.select(F.col("doc_id").alias("id")))
-    merge("burls", "doc_id", burls, changed_ids)
-    merge(
-        "triples", "subj", triples,
-        changed_ids.select(normalize_uuid(F.col("doc_id")).alias("subj")),
+    changed = admit_newer(
+        freshness_dedup(incoming), _read_state(spark, state_dir, "meta"), "doc_id"
     )
-    if cfg.with_chunks:
-        merge(
-            "chunks", "page_id", chunks_of(nodes),
-            changed_ids.select(F.col("doc_id").alias("page_id")),
-        )
+    # a plain persist is safe: every merge stages its writes, and meta/ (the
+    # one table this lineage reads) is replaced last, after the last read
+    combined = (
+        fused_docs_projection(changed, cfg)
+        .withColumn("bucket", bucket_of(F.col("doc_id")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        per_bucket = combined.groupBy("bucket").count().collect()
+        touched = sorted(r["bucket"] for r in per_bucket)
+        n_changed = sum(r["count"] for r in per_bucket)
+        meta, nodes, triples, burls = _extract_changed(combined, cfg)
 
-    return _result()
+        def merge(table: str, key_col: str, rows: DataFrame, key: Column) -> None:
+            merge_bucketed(
+                spark, f"{state_dir}/{table}", key_col, rows,
+                meta.select(key.alias(key_col)), touched, _state_schemas()[table],
+            )
+
+        def chunks_of(pages: DataFrame) -> DataFrame:
+            from knowledge_nexus_spark.operators.chunking import chunk_and_embed
+
+            return chunk_and_embed(pages, cfg.chunk_size, cfg.chunk_overlap, cfg.embedding_dim)
+
+        doc_id = F.col("doc_id")
+        merge("nodes", "id", nodes, doc_id)
+        merge("burls", "doc_id", burls, doc_id)
+        merge("triples", "subj", triples, normalize_uuid(doc_id))
+        # chunks/ is either current or absent: a refresh without chunks
+        # would leave the changed pages' old chunks behind, so it drops the
+        # table, and a refresh with chunks over a state that has none (built
+        # or refreshed without them) chunks every stored page once
+        if not cfg.with_chunks:
+            delete_snapshot(spark, f"{state_dir}/chunks")
+        elif not snapshot_exists(spark, f"{state_dir}/chunks"):
+            pages = _read_state(spark, state_dir, "nodes").drop("bucket")
+            merge_bucketed(
+                spark, f"{state_dir}/chunks", "page_id", chunks_of(pages),
+                pages.select(F.col("id").alias("page_id")), list(range(N_BUCKETS)),
+                _state_schemas()["chunks"],
+            )
+        elif n_changed:
+            merge("chunks", "page_id", chunks_of(nodes), doc_id)
+        merge("meta", "doc_id", meta, doc_id)  # the watermark, last
+    finally:
+        combined.unpersist(blocking=True)
+
+    return RefreshResult(
+        nodes=_derive_nodes(spark, state_dir),
+        edges=_derive_edges(spark, state_dir, cfg),
+        n_changed=n_changed,
+        chunks=_read_state(spark, state_dir, "chunks").drop("bucket")
+        if cfg.with_chunks
+        else None,
+    )
 
 
 def _derive_nodes(spark: SparkSession, state_dir: str) -> DataFrame:

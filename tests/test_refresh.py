@@ -1,6 +1,7 @@
 """Incremental re-ingest (refresh_updated_pages parity): touch K of N docs,
 re-run, exactly K re-extracted, final graph equals a full rebuild."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from knowledge_nexus_spark.datagen import CorpusConfig, generate_documents
@@ -267,3 +268,97 @@ def test_refresh_handles_new_and_archived_docs(spark, tmp_path):
     ids = {i for (i, *_r) in _node_set(r2.nodes)}
     assert "brandnewdoc00000000000000000001" in ids
     assert victim not in ids  # archived → node dropped (add_archived=False)
+
+
+def test_refresh_failed_midway_is_redone_by_the_next_refresh(spark, tmp_path, monkeypatch):
+    """The watermark is merged last: a refresh that fails after merging
+    some tables (here the triples merge raises) leaves meta/ as it was, so
+    re-running it re-extracts the same docs and the state equals a full
+    rebuild (with meta/ merged first the re-run refreshed 0 docs and kept
+    the stale triples for good)."""
+    import knowledge_nexus_spark.operators.refresh as refresh_mod
+
+    state = str(tmp_path / "state")
+    docs_v1 = generate_documents(spark, CFG)
+    refresh_updated(spark, docs_v1, state, PCFG)
+    docs_v2 = _reedit(docs_v1, 5, 0, "2035-01-01T00:00:00.000001Z")
+
+    real = refresh_mod.merge_bucketed
+
+    def failing(spark_, path, *args, **kwargs):
+        if path.rstrip("/").endswith("/triples"):
+            raise RuntimeError("injected failure in the triples merge")
+        return real(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(refresh_mod, "merge_bucketed", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        refresh_updated(spark, docs_v2, state, PCFG)
+    monkeypatch.setattr(refresh_mod, "merge_bucketed", real)
+
+    r = refresh_updated(spark, docs_v2, state, PCFG)
+    assert r.n_changed == 5
+    full = build_graph(spark, docs_v2, PCFG)
+    try:
+        assert _node_set(r.nodes) == _node_set(full.nodes)
+        assert _edge_set(r.edges) == _edge_set(full.edges)
+    finally:
+        full.unpersist()
+
+
+def test_tied_reedit_in_later_drop_resolves_alike_in_stream_and_refresh(spark, tmp_path):
+    """One admission rule: a later drop re-editing docs at their STORED
+    last_edited_time (a tie) is not applied, through the stream sink as
+    through refresh, so both leave the same triples for those docs."""
+    from knowledge_nexus_spark.operators.graphops import freshness_dedup
+    from knowledge_nexus_spark.pipeline import fused_docs_projection, projection_graph
+    from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
+
+    state, edges = str(tmp_path / "state"), str(tmp_path / "edges")
+    docs = generate_documents(spark, CFG)
+    refresh_updated(spark, docs, state, PCFG)
+    merge_edges_batch(docs, 0, edges)
+
+    ids = [
+        r.doc_id
+        for r in docs.filter(~F.col("archived") & ~F.col("in_trash"))
+        .select("doc_id").distinct().orderBy("doc_id").limit(5).collect()
+    ]
+    tied = (
+        freshness_dedup(docs.filter(F.col("doc_id").isin(ids)))
+        .withColumn("spans", F.filter("spans", lambda s: s["kind"] != "link_to_page"))
+        .localCheckpoint(eager=True)
+    )
+    assert refresh_updated(spark, tied, state, PCFG).n_changed == 0
+    merge_edges_batch(tied, 1, edges)
+
+    def triples_of(df):
+        return {
+            tuple(r)
+            for r in df.filter(F.col("subj").isin(ids))
+            .select("subj", "pred", "obj", F.coalesce("context", F.lit(""))).collect()
+        }
+
+    via_refresh = triples_of(spark.read.parquet(f"{state}/triples"))
+    assert triples_of(spark.read.parquet(edges)) == via_refresh
+    tied_triples = projection_graph(fused_docs_projection(tied, PCFG), PCFG)[1]
+    assert triples_of(tied_triples) != via_refresh, "the tied re-edit must change triples"
+
+
+def test_refresh_and_epoch_release_what_they_persist(spark, tmp_path):
+    """Each refresh and each stream epoch releases every RDD it persists
+    (a localCheckpoint outlives ``unpersist`` and piled up per call)."""
+    from knowledge_nexus_spark.streaming.ingest import merge_edges_batch
+
+    state, edges = str(tmp_path / "state"), str(tmp_path / "edges")
+    docs = generate_documents(spark, CFG)
+    refresh_updated(spark, docs, state, PCFG)
+    merge_edges_batch(docs, 0, edges)
+    ts = "2036-01-01T00:00:00.000001Z"
+    docs_v2 = _reedit(docs, 3, 0, ts)
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert refresh_updated(spark, docs_v2, state, PCFG).n_changed == 3
+    merge_edges_batch(docs_v2.filter(F.col("last_edited_time") == ts), 1, edges)
+    # ids, not the count: the context cleaner may drop older RDDs meanwhile
+    assert set(jsc.getPersistentRDDs().keys()) <= before
